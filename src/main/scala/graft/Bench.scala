@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall-clock seconds.
   *
@@ -9,6 +11,29 @@ package graft
   * on the driver.
   */
 object Bench {
+
+  /** One timed rep of a declared query — the single timing loop every
+    * measurement main shares (Bench, tools.BenchOne, tools.AbConf,
+    * tools.ProfileOne, tools.ScaleSmoke), so a hygiene-protocol change
+    * lands in one place. Runs the query through the `noop` sink and
+    * returns its wall seconds; afterwards, OUTSIDE the timed region,
+    * drops the rep's orphaned checkpoint caches (VERDICT r8 #1: every
+    * rep calls .ckpt() afresh, so a long-lived process otherwise
+    * accumulates hundreds of them — by the r8 capture's tail the
+    * session pressure inflated individual queries 8× over their
+    * isolated steady states, q177 7.6 s vs 0.9 s). The
+    * DerivationCache-owned shared derivations are kept: their
+    * checkpoint blocks are unrecoverable (lineage is truncated) and
+    * later queries reuse them. Throws on query failure. */
+  def runOnce(spark: SparkSession, name: String, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    val t = (System.nanoTime() - t0) / 1e9
+    graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
+    t
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Host-load stamps (VERDICT r17 #2): the r17 32-core capture was
@@ -30,18 +55,6 @@ object Bench {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
     val names = SparkEntry.registry.map(_.name)
-    // Checkpoint-cache hygiene (VERDICT r8 #1): every query rep calls
-    // .ckpt() afresh, so a full bench accumulates hundreds of orphaned
-    // localCheckpoint caches — by the r8 capture's tail the session
-    // pressure inflated individual queries 8× over their BenchOne
-    // steady states (q177 7.6 s vs 0.9 s). After each rep, unpersist
-    // every persistent RDD EXCEPT the DerivationCache-owned shared
-    // derivations (their checkpoint blocks are unrecoverable — lineage
-    // is truncated — and later queries reuse them). Cleanup runs
-    // outside the timed region.
-    val sc = spark.sparkContext
-    def dropOrphanCheckpoints(): Unit =
-      graft.plans.DerivationCache.dropOrphans(sc)
     // Per-query adaptive repeats: the first run absorbs whole-stage-
     // codegen compilation (3s+ even for trivial queries — NOTES.md
     // documents ±25% run-to-run noise from this plus container jitter).
@@ -49,18 +62,7 @@ object Bench {
     // was negligible and min(t0,t1) is the steady state, otherwise run
     // a third time and report the min of the two warm runs. Reported
     // numbers are reproducible across bench invocations to ~10%.
-    // ONE timing-rep definition for the in-bench sweep AND the steady
-    // block below (review finding, round 12: two verbatim copies of
-    // this closure let the next hygiene-protocol change silently
-    // diverge the two measurements).
-    def runOnce(name: String): Double = { // throws on query failure
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      dropOrphanCheckpoints()
-      t
-    }
+    def runOnce(name: String): Double = Bench.runOnce(spark, name, sfDir)
     val results: Seq[(String, Option[Double])] = names.map { name =>
       // A failed query must NOT masquerade as a (near-zero) timing in
       // the JSON — it is excluded from `queries` and listed in `failed`.
@@ -120,7 +122,7 @@ object Bench {
         .flatMap { name =>
           try {
             graft.plans.DerivationCache.evictAll()
-            dropOrphanCheckpoints()
+            graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
             runOnce(name) // rebuilds the evicted derivations + codegen
             Some(name -> math.min(runOnce(name), runOnce(name)))
           } catch {

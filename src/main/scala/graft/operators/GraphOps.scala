@@ -131,8 +131,8 @@ object GraphOps {
     for (r <- 1 to rounds) {
       val cand = edges.join(dist, col("src") === col("id"))
         .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
-      // Checkpoint cadence, MEASURED at 10× edges (20M, ScaleSmoke
-      // SPARK_GRAFT_BFS_CADENCE): every-round 5.07 s, every-2 4.06 s,
+      // Checkpoint cadence, MEASURED at 10× edges (20M, NOTES.md "BFS
+      // checkpoint cadence MEASURED"): every-round 5.07 s, every-2 4.06 s,
       // none-within-3-rounds 3.06 s. dist is consumed twice per round
       // so the logical plan doubles per un-checkpointed round — but the
       // replayed stages end at ALREADY-MATERIALIZED shuffle outputs

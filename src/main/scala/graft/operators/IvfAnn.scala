@@ -32,9 +32,9 @@ object IvfAnn {
     * triangle bound in phase 2 regardless of breadth), so nprobe grows
     * logarithmically: enough extra cells on big corpora to tighten L,
     * while phase 1 stays Õ(n^1.5). */
-  private[graft] def nlistFor(n: Long): Int =
+  private def nlistFor(n: Long): Int =
     math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
-  private[graft] def nprobeFor(nlist: Int): Int =
+  private def nprobeFor(nlist: Int): Int =
     math.max(4, math.ceil(math.log(nlist.toDouble) / math.log(2.0)).toInt)
   private val lloydIters = 3
 
@@ -217,7 +217,8 @@ object IvfAnn {
     * (a_id, cell, theta, ub): it has n·nlist rows, so keeping the
     * 64-dim embedding on every row would checkpoint n·nlist·dim
     * doubles — ~50 GB at 200k vectors, the shape that OOMed the first
-    * IVF100X run. Probe lists re-attach vectors via an a_id join AFTER
+    * IVF100X run (SCALE.md "Round 9: IVF constants scaled with the
+    * corpus"). Probe lists re-attach vectors via an a_id join AFTER
     * the bound filters, when they are probe-sized again. */
   private def memberAndScores(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Int) = {
@@ -266,9 +267,9 @@ object IvfAnn {
   def nearestNeighbors(s: SparkSession, d: String): DataFrame =
     nnCache.getOrCompute(s, d)(computeNearestNeighbors(s, d))
 
-  /** Uncached form for measurement tools (Q283AMORT times the probe
-    * pass itself; through the cache a second call is a no-op). */
-  private[graft] def computeNearestNeighbors(s: SparkSession, d: String): DataFrame = {
+  /** The uncached 1-NN probe pass behind [[nearestNeighbors]] (SCALE.md
+    * "Round 11: q283 amortization split" timed it on its own). */
+  private def computeNearestNeighbors(s: SparkSession, d: String): DataFrame = {
     val (members, scored, vecs, nprobe) = memberAndScores(s, d)
     def cosines(probe: DataFrame): DataFrame =
       probeCosines(members, probe.join(vecs, "a_id"))
@@ -540,7 +541,8 @@ object IvfAnn {
   private[graft] val adjacencyFlatBroadcastMaxCells: Long = 131072L
 
   /** Routing point between the flat and grouped adjacency builds,
-    * measured in ScaleSmoke ADJSCALE (SCALE.md round 11): the flat
+    * measured by the ADJSCALE leg (SCALE.md "Round 11: recursive
+    * centroid-set adjacency"): the flat
     * join is quadratic in ncells but constant-light per pair (0.51 /
     * 1.58 / 5.28 / 39.2 s at 8k / 16k / 32k / 100k cells — clean n²);
     * the grouped build pays a coarse Lloyd over the centroid set plus
@@ -667,7 +669,8 @@ object IvfAnn {
     * phase to [[flatCellAdjacency]]: at ≥½ survival the grouped fine
     * join does ≥½ of flat's pair evaluations through a heavier
     * three-way join, so it can no longer repay its join overhead —
-    * ADJSCALE already measured the no-pruning regime (grouped 2.2×
+    * ADJSCALE (SCALE.md "Round 11: recursive centroid-set adjacency")
+    * already measured the no-pruning regime (grouped 2.2×
     * worse than flat at 32k cells when ngroups sat below the centroid
     * set's natural region count, i.e. survival ≈ 1). The crossover
     * between the regimes is shallow (either route is within the
@@ -801,7 +804,8 @@ object IvfAnn {
         greatest(col("radius"), coalesce(col("nradius"), lit(0.0))))
       .drop("nradius")
       .ckpt()
-    // STATS RESET (the MAINT10X lesson): localCheckpoint PRESERVES the
+    // STATS RESET (the lesson of SCALE.md "Round 10: maintainer append
+    // cost is O(delta)"): localCheckpoint PRESERVES the
     // optimized plan's Catalyst statistics, and this plan references
     // the previous cmeta TWICE (the broadcast radius probe above and
     // the merge join) — join size estimates are the PRODUCT of the

@@ -404,41 +404,6 @@ object LlmOps {
     else ("banded", simhashBandedPairs(sig, uniq))
   }
 
-  /** q216's banding fan-out, for scale measurement (ScaleSmoke
-    * SIMHASH100X): per band over DISTINCT signatures — bucket count,
-    * max bucket, and Σ sz² (the band's candidate-join volume) — plus
-    * the signature-diversity row the banded join's cost tracks. */
-  private[graft] def simhashBandProfile(s: SparkSession, d: String): DataFrame = {
-    val tokens = Tables.documents(s, d)
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-    val sig = simhashAgg(tokens)
-    val uniq = sig.select(col("simhash")).distinct()
-    val bb = uniq.select(col("simhash"),
-        explode(array((0 to 3).map(lit): _*)).as("band"))
-      .withColumn("bv", expr("shiftright(simhash, band * 8) % 256"))
-    bb.groupBy("band", "bv").agg(count(lit(1)).as("sz"))
-      .groupBy("band").agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(col("sz") * col("sz")).as("cand_volume"))
-      .orderBy("band")
-  }
-
-  /** q216b's fan-out under the same lens: per 16-bit band over distinct
-    * 64-bit signatures. */
-  private[graft] def simhash64BandProfile(s: SparkSession, d: String): DataFrame = {
-    val tokens = Tables.documents(s, d)
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-    val uniq = simhash64Agg(tokens)
-      .select("simhash", "bv0", "bv1", "bv2", "bv3").distinct()
-    val bb = uniq.select(posexplode(
-      array(col("bv0"), col("bv1"), col("bv2"), col("bv3"))).as(Seq("band", "bv")))
-    bb.groupBy("band", "bv").agg(count(lit(1)).as("sz"))
-      .groupBy("band").agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(col("sz") * col("sz")).as("cand_volume"))
-      .orderBy("band")
-  }
-
   /** Shared q216/q216c oracle: banded candidates + exact bit_count
     * verify in DuckDB — route-agnostic (both Spark branches are exact,
     * so any route matches this). */
@@ -570,8 +535,8 @@ object LlmOps {
   private val jaccardThreshold10 = 3 // t = 0.3, ×10 for integer math
 
   /** THE production near-dup threshold (t = 0.8), shared by q44's
-    * verify filter + oracle, q43b's declaration, DedupSpec's recall
-    * certification, and RecallCheck — one constant so a retune cannot
+    * verify filter + oracle, q43b's declaration, and DedupSpec's recall
+    * certification — one constant so a retune cannot
     * leave the verify filter and the oracle/certificate at different
     * thresholds. Matched to the 8×4 banding S-curve: miss probability
     * (1−t⁴)⁸ ≤ 1.5% at t = 0.8. */
@@ -643,7 +608,7 @@ object LlmOps {
        |)""".stripMargin
 
   /** Distinct shingle sets per doc with blocking keys and set size. */
-  private[graft] def shingleBlocks(s: SparkSession, d: String, fan: Boolean = false): DataFrame =
+  private def shingleBlocks(s: SparkSession, d: String, fan: Boolean = false): DataFrame =
     docsWithShingles(s, d, fan)
       .select(col("doc_id"), col("lang"), (col("n_chars") / 100).cast("long").as("lb"),
         col("shingles").as("sg"))
@@ -731,7 +696,7 @@ object LlmOps {
     * existing table across sessions (the persisted-snapshot contract —
     * same idea as IvfAnn.writeClustered, realized as a bucketed
     * catalog table). */
-  private[graft] def bucketedShingleIndex(s: SparkSession, d: String): DataFrame = {
+  private def bucketedShingleIndex(s: SparkSession, d: String): DataFrame = {
     // Plan-audit mode (VERDICT r9 #8): building the index is a
     // CONSTRUCTION-TIME WAREHOUSE MUTATION (saveAsTable + stale-
     // generation deletion), so plan-only tooling (PlanAuditSpec,
@@ -791,10 +756,10 @@ object LlmOps {
     s.table(name)
   }
 
-  /** q255b's probe body over the pre-exploded bucketed index — shared
-    * with ScaleSmoke's DELTAPROBE so the smoke always times the plan
-    * the declared query ships. */
-  private[graft] def bucketedDeltaPairs(
+  /** q255b's probe body over the pre-exploded bucketed index (the
+    * fixed-delta probe SCALE.md "Round 8: fixed-delta probe for q255"
+    * timed). */
+  private def bucketedDeltaPairs(
       idx: DataFrame, deltaSh: DataFrame, t10: Int): DataFrame = {
     val a = idx.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
       col("lang"), col("lb"), col("shingle"))
@@ -815,9 +780,9 @@ object LlmOps {
     * whose LARGER element lies in `shDelta`. `shIndex` models the
     * persisted corpus shingle inventory (callers checkpoint/persist it
     * untimed); only the delta side is "today's" work — the per-day cost
-    * shape ScaleSmoke's DELTAPROBE mode measures against a fixed-size
-    * delta on a growing corpus. */
-  private[graft] def deltaNearDupProbe(
+    * shape SCALE.md "Round 8: fixed-delta probe for q255" measured
+    * against a fixed-size delta on a growing corpus. */
+  private def deltaNearDupProbe(
       shIndex: DataFrame, shDelta: DataFrame, t10: Int): DataFrame = {
     val exAll = shIndex.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
       col("lang"), col("lb"), explode(col("sg")).as("shingle"))
@@ -845,8 +810,9 @@ object LlmOps {
     * corpus removal (q82) — this cache is that persisted intermediate
     * (same contract as IvfAnn.cachedIndex: RNG-free derivation over an
     * immutable fixture dir, so the cached frame equals a recomputation
-    * bit-for-bit). Tools that MEASURE the join itself (ScaleSmoke,
-    * RecallCheck) call jaccardCountJoinAt, which stays uncached. */
+    * bit-for-bit). Callers that MEASURE the join itself (the
+    * DedupSpec/LawsSpec certifications) call jaccardCountJoinAt, which
+    * stays uncached. */
   private val pairStatsCache = new graft.plans.DerivationCache[DataFrame]
 
   /** The shared pair-graph build, promoted to the BUCKETED layout
@@ -2430,8 +2396,9 @@ object LlmOps {
     // never corpus². (At 100 TB the index side is the persisted
     // shingle inventory — the same snapshot artifact cachedPairStats
     // models; only delta shingles are computed fresh each day.)
-    // (core factored into deltaNearDupProbe so ScaleSmoke can time the
-    // per-day probe against a FIXED-size delta while the corpus grows)
+    // (core factored into deltaNearDupProbe, the per-day probe SCALE.md
+    // "Round 8: fixed-delta probe for q255" timed against a FIXED-size
+    // delta while the corpus grows)
     Q("q255_delta_neardup", deltaNearDupOracleSql) { (s, d) =>
       val mx = Tables.documents(s, d).agg(max(col("doc_id")).as("mx"))
       // consumed by BOTH the index side and the delta probe side —

@@ -31,11 +31,11 @@ object PipelineOps {
 
   private def fastDot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
-  /** q283's rollup over a materialized 1-NN frame — factored out so
-    * the amortization smoke (SCALE.md round 11, VERDICT r10 #5) can
-    * time the labels-×-corpus-linear rollup separately from the shared
-    * NN pass it rides. */
-  private[graft] def labelPurityRollup(s: SparkSession, d: String,
+  /** q283's rollup over a materialized 1-NN frame — the
+    * labels-×-corpus-linear marginal the amortization split (SCALE.md
+    * "Round 11: q283 amortization split", VERDICT r10 #5) timed
+    * separately from the shared NN pass it rides. */
+  private def labelPurityRollup(s: SparkSession, d: String,
       nn: DataFrame): DataFrame = {
     val lbl = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("lbl"))
@@ -105,11 +105,11 @@ object PipelineOps {
     *    survivors-only corpus).
     *
     * Returns the per-stage survivor frames (lazily — the caller
-    * decides what to materialize) plus the two plan tables. PIPE10X
-    * (ScaleSmoke) measures the composed wall against the sum of the
-    * stages' isolated steady states and asserts parity against
-    * independently-run cold stages; PipelineSpec pins the same parity
-    * on the sf0.001 fixture. */
+    * decides what to materialize) plus the two plan tables. The PIPE10X
+    * leg (SCALE.md "Round 12: PIPE10X") measured the composed wall
+    * against the sum of the stages' isolated steady states and asserted
+    * parity against independently-run cold stages; PipelineSpec pins
+    * the same parity on the sf0.001 fixture. */
   final case class CurationRun(stages: Seq[(String, DataFrame)],
       survivors: DataFrame, mixture: DataFrame, shards: DataFrame)
 
@@ -825,7 +825,7 @@ object PipelineOps {
         |FROM f ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       // r18 spread A/B on the unigramStats feed, REJECTED: interleaved
-      // AbConf (graft.spread) med 3.67 s (on) vs 2.87 s (off) — the
+      // in-JVM spread-on/off reps, med 3.67 s (on) vs 2.87 s (off) — the
       // fused explode+two-level-aggregate downstream loses to the
       // extra exchange, the same pattern r17 recorded at q269.
       val u = TrainingOps.unigramStats(docs)

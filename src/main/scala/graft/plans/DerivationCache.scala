@@ -93,8 +93,8 @@ object DerivationCache {
     b.result()
   }
 
-  /** Measurement-harness hygiene, shared by Bench/BenchOne/ScaleSmoke/
-    * RouteProbe (one definition — the protocol changed twice already):
+  /** Measurement-harness hygiene, run after every timed rep by
+    * Bench.runOnce (one definition — the protocol changed twice already):
     * unpersist every persistent RDD EXCEPT the cache-owned shared
     * derivations, whose localCheckpoint blocks are unrecoverable
     * (lineage truncated) and reused across queries. `blocking = true`

@@ -28,15 +28,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
-  /** Measurement seam (AbConf): lets an in-JVM A/B interleave
-    * spread-on vs spread-off reps inside one session, the only way to
-    * resolve a ~0.5 s code-change effect under this host's degraded
-    * ambient windows. Production and bench never touch it. */
-  @volatile var enabled: Boolean = true
-
   implicit final class SpreadOps(private val df: DataFrame) extends AnyVal {
     def spread(keys: Column*): DataFrame = {
-      if (!enabled || Ckpt.auditMode) return df
+      if (Ckpt.auditMode) return df
       // Enforce the exchange-free-lineage precondition (ADVICE r17):
       // on a shuffled lineage the getNumPartitions probe below would
       // eagerly materialize AQE query stages at PLAN time. Rather than

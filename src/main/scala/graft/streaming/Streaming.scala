@@ -560,7 +560,8 @@ object Streaming {
     // never-restored index is memory-rooted and survives every
     // compaction deletion pass untouched. While false, a head-moved
     // finalize skips the O(tail) index re-root entirely — the
-    // round-14 COMPACTLIVE re-leg showed that re-root (a tail assign
+    // round-14 COMPACTLIVE re-leg (SCALE.md "Round 14: two-phase
+    // compactLog") showed that re-root (a tail assign
     // job inside the monitor) was the residual stall under continuous
     // arrival. Set by restore; cleared by any finalize that re-roots
     // the index onto durably-truncated frames.
@@ -619,7 +620,8 @@ object Streaming {
     @volatile private var compactionCount = 0L
 
     /** Operational counters for a deployment to scrape (VERDICT r15
-      * #4 — the REPLICA100X runbook alarm reads these): `compactions` =
+      * #4 — the runbook alarm priced in SCALE.md "Round 15:
+      * REPLICA10X/100X" reads these): `compactions` =
       * completed compactLog passes in this process; `generations` =
       * the newest completed generation's batch id (-1 before the
       * first), monotone across restarts, so replica lag and
@@ -882,7 +884,8 @@ object Streaming {
       * TWO-PHASE under a live stream (VERDICT r13 #1): round 13 held
       * the maintainer's monitor across the whole pass, so the one
       * micro-batch arriving during a compaction waited the FULL
-      * corpus-proportional wall (COMPACTLIVE10X: max batch wall ≈ solo
+      * corpus-proportional wall (SCALE.md "Round 13: COMPACTLIVE10X":
+      * max batch wall ≈ solo
       * + compaction; minutes at 100 TB). Now only two SHORT critical
       * sections take the monitor: (capture) read one consistent
       * (lastBatch, corpus, index) triple — DataFrames are immutable and
@@ -963,7 +966,8 @@ object Streaming {
         // adjudicated, not a hole): before any generation exists it
         // admits exactly ONE compaction even over an empty-only
         // delivery history — that write persists the quantizer
-        // ensemble (the RESTORE100X 112× fix) and keeps crash repair
+        // ensemble (the 112× fix of SCALE.md "Round 13: RESTORE100X")
+        // and keeps crash repair
         // reachable (a restore over a generation whose ensemble write
         // crashed leaves lastCompactedGen unset with zero tail
         // deltas). After the first generation the empty-batch no-op
@@ -1007,7 +1011,8 @@ object Streaming {
             corpusSnap.write.mode("overwrite").parquet(s"$p/compact/$lb")
           // Persist the live quantizer alongside the generation
           // (round 13): without it a snapshot restore must RE-LEARN
-          // the index from the snapshot corpus — RESTORE100X measured
+          // the index from the snapshot corpus — SCALE.md "Round 13:
+          // RESTORE100X" measured
           // that re-learn at 120.75 s vs 32.8 s for the delta-log
           // path at 600k vectors. The ensemble is slim ((vec_id,
           // cell) assignments, the nlist-row centroid/radius table, a
@@ -1296,7 +1301,8 @@ object Streaming {
       // equals the chosen snapshot's counts; an incomplete ensemble (no
       // _SUCCESS — a mid-write crash) falls back to re-learning from
       // the snapshot corpus, which stays correct, just slower
-      // (RESTORE100X: 32.8 s read vs 120.8 s re-learn at 600k vectors).
+      // (SCALE.md "Round 13: RESTORE100X": 32.8 s read vs 120.8 s
+      // re-learn at 600k vectors).
       val preset = base
         .filter(b => markerExists(spark, s"$path/quantizer/$b"))
         .map { b =>
@@ -1770,9 +1776,9 @@ object Streaming {
   private def headRecordPath(p: String, seq: Long) =
     new org.apache.hadoop.fs.Path(s"$p/head/$seq")
 
-  // private[graft], not [streaming]: the HEADTAIL economics leg
-  // (tools.ScaleSmoke) drives the real writer to price records at the
-  // never-compacting extreme without paying 4000 data-plane batches
+  // private[graft], not private: RecoveryFaultSpec drives the real
+  // writer to build a record at the never-compacting extreme (SCALE.md
+  // "Round 17: HEADTAIL") without paying 4000 data-plane batches
   private[graft] def writeHeadRecord(spark: SparkSession, p: String,
       seq: Long, gen: Long, tail: Seq[Long]): Unit = {
     val (fs, _) = hfs(spark, s"$p/head")
@@ -1816,7 +1822,7 @@ object Streaming {
       // `(,[0-9]+)*` repetition, so a deep tail — the never-compacting
       // deployment the sizing note prices — blew the stack at ~4000
       // ids (StackOverflowError out of restore; caught by the r17
-      // HEADTAIL economics leg doing exactly what it was built for).
+      // HEADTAIL economics measurement, SCALE.md "Round 17: HEADTAIL").
       // ASCII-only and ≤18 digits (review r17 pass 1): Char.isDigit
       // admits Unicode digits Long.parseLong also accepts, and an
       // unbounded digit run overflows toLong into a crash — foreign
@@ -1851,7 +1857,7 @@ object Streaming {
     * the other slot naming the previous compaction's record, which its
     * own retention kept and the torn compaction's retention — which
     * runs only after this write completes — never touched). */
-  private[graft] def writeHeadAnchor(spark: SparkSession, p: String,
+  private def writeHeadAnchor(spark: SparkSession, p: String,
       seq: Long): Unit = {
     val (fs, _) = hfs(spark, s"$p/head")
     val best = Seq(0, 1).flatMap(i => readHeadAnchorSlot(spark, p, i)
@@ -2267,7 +2273,8 @@ object Streaming {
               (coalesce(col("tok"), lit(0L)) + coalesce(col("d"), lit(0L)))
                 .as("tok"))
             .ckpt()
-          // STATS RESET (the appendToIndex/MAINT10X lesson):
+          // STATS RESET (the appendToIndex lesson of SCALE.md "Round 10:
+          // maintainer append cost is O(delta)"):
           // localCheckpoint preserves Catalyst statistics and this plan
           // joins the previous counts frame, so the inherited
           // sizeInBytes would compound per micro-batch on a long-lived

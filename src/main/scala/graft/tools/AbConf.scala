@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 
 /** In-JVM A/B of a runtime SQL conf over declared queries (dev tool,
   * guide §1): one session, per-query codegen warm, then interleaved
@@ -33,27 +33,19 @@ object AbConf {
         graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
       }
       val g0 = gcMs
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = Bench.runOnce(spark, name, dir)
       lastGc = gcMs - g0
-      graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
       t
     }
     names.foreach { n =>
       once(n); once(n) // codegen + derivation warm (both plans compile below anyway)
       val as = collection.mutable.ArrayBuffer.empty[Double]
       val bs = collection.mutable.ArrayBuffer.empty[Double]
-      // special key "graft.spread" toggles the Spread seam instead of a
-      // SQL conf (code-change A/B under noisy ambient windows)
-      def set(v: String): Unit =
-        if (key == "graft.spread") graft.plans.Spread.enabled = v.toBoolean
-        else spark.conf.set(key, v)
       val ag = collection.mutable.ArrayBuffer.empty[Long]
       val bg = collection.mutable.ArrayBuffer.empty[Long]
       for (_ <- 1 to reps) {
-        set(valA); as += once(n); ag += lastGc
-        set(valB); bs += once(n); bg += lastGc
+        spark.conf.set(key, valA); as += once(n); ag += lastGc
+        spark.conf.set(key, valB); bs += once(n); bg += lastGc
       }
       def stats(xs: Seq[Double], gs: Seq[Long]) =
         f"min=${xs.min}%5.2f med=${xs.sorted.apply(xs.size / 2)}%5.2f gc=${gs.sum / gs.size}%4dms"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 
 /** Time a single declared query N times on a fixture dir (dev tool). */
 object BenchOne {
@@ -10,12 +10,8 @@ object BenchOne {
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = GraftSession.create()
     for (i <- 1 to reps) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"BENCHONE $name rep$i ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      // same per-rep hygiene as Bench: drop the rep's orphaned
-      // checkpoint caches, keep the shared derivations
-      graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
+      val t = Bench.runOnce(spark, name, dir)
+      println(f"BENCHONE $name rep$i $t%7.2f s")
     }
     spark.stop()
   }

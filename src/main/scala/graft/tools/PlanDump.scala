@@ -7,10 +7,6 @@ import org.apache.spark.sql.execution.FormattedMode
   * the query names passed as args (default: the newest operators). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_NO_SPREAD=1 reproduces the pre-r17 plans (the Spread
-    // fan-outs off) so plans/r17/*_before.txt regenerate from HEAD
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD"))
-      graft.plans.Spread.enabled = false
     val spark = GraftSession.create()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq

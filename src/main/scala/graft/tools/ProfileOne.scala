@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -20,15 +21,33 @@ object ProfileOne {
     spark.stop()
   }
 
+  /** How long the listener bus may lag behind the measured run before
+    * the profile is refused as incomplete. */
+  private val drainTimeoutMs = 60000L
+
   private def profile(spark: org.apache.spark.sql.SparkSession, dir: String,
       name: String): Unit = {
+    val sc = spark.sparkContext
+    val group = s"graft-profile-$name"
 
     final case class StageRec(id: Int, name: String, tasks: Int,
         taskTimeMs: Long, wallMs: Long, maxTaskMs: Long)
     val stages = mutable.ArrayBuffer.empty[StageRec]
     val taskTime = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val maxTask = mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    val groupStages = mutable.Set.empty[Int]
+    val endedJobs = mutable.Set.empty[Int]
     val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+        // SQL broadcast jobs inherit the group through the captured
+        // local properties, so the group names every job of the query
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          groupStages ++= j.stageIds
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+        endedJobs += j.jobId
+      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
         val ms = Option(t.taskInfo).map(_.duration).getOrElse(0L)
         taskTime(t.stageId) += ms
@@ -42,24 +61,39 @@ object ProfileOne {
       }
     }
 
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      t
-    }
-    val warm1 = once() // codegen + shared-derivation warm
-    val warm2 = once()
-    spark.sparkContext.addSparkListener(listener)
-    val t = once()
-    // Drain the async listener bus BEFORE detaching (ADVICE r17):
-    // events still queued at removal are silently dropped and the
-    // profile under-reports stages.
-    Thread.sleep(500)
-    spark.sparkContext.removeSparkListener(listener)
-    println(f"PROFILE $name warm1=$warm1%.2f warm2=$warm2%.2f measured=$t%.2f s, ${stages.size} stages")
-    val sorted = stages.sortBy(-_.wallMs)
+    val warm1 = Bench.runOnce(spark, name, dir) // codegen + shared-derivation warm
+    val warm2 = Bench.runOnce(spark, name, dir)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, s"ProfileOne $name")
+    val t = try Bench.runOnce(spark, name, dir) finally sc.clearJobGroup()
+    // Drain the async listener bus BEFORE detaching: events still queued
+    // at removal are silently dropped and the profile would under-report
+    // stages. A job's task and stage events are delivered before its
+    // JobEnd, so the listener has everything once it has seen JobEnd for
+    // every job of the group. The fence job makes the group's id list
+    // complete: job ids are monotonic and each bus queue delivers in
+    // order, so once both this listener and the status store have seen
+    // the fence finish, they have seen every measured job start.
+    val fence = sc.submitJob(sc.parallelize(Seq(0), 1),
+      (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ())
+    scala.concurrent.Await.ready(fence, scala.concurrent.duration.Duration.Inf)
+    val fenceId = fence.jobIds.head
+    def drained: Boolean =
+      listener.synchronized(endedJobs.contains(fenceId)) &&
+        sc.statusTracker.getJobInfo(fenceId)
+          .exists(_.status == JobExecutionStatus.SUCCEEDED) &&
+        sc.statusTracker.getJobIdsForGroup(group)
+          .forall(id => listener.synchronized(endedJobs.contains(id)))
+    val deadline = System.currentTimeMillis() + drainTimeoutMs
+    while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    sc.removeSparkListener(listener)
+    if (!drained)
+      throw new IllegalStateException(s"ProfileOne $name: the listener bus " +
+        s"did not deliver every JobEnd of the measured run within " +
+        s"${drainTimeoutMs / 1000} s; refusing to print a short profile")
+    val measured = listener.synchronized(stages.filter(s => groupStages(s.id)).toSeq)
+    println(f"PROFILE $name warm1=$warm1%.2f warm2=$warm2%.2f measured=$t%.2f s, ${measured.size} stages")
+    val sorted = measured.sortBy(-_.wallMs)
     sorted.take(25).foreach { s =>
       println(f"PROFILE  stage=${s.id}%4d wall=${s.wallMs}%6d ms task_sum=${s.taskTimeMs}%6d ms max_task=${s.maxTaskMs}%6d ms tasks=${s.tasks}%4d  ${s.name.take(90)}")
     }

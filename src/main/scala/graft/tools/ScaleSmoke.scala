@@ -1,14 +1,16 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-stress harness: synthesizes 10× (documents) / 5× (embeddings)
-  * corpora with the fixture schemas into /tmp and times the operators
-  * whose cost could grow super-linearly (candidate-pair dedup,
-  * similarity search), printing 1× vs N× wall-clock so scaling exponents
-  * are measured, not guessed. Results land in SCALE.md.
+/** Scale check: synthesizes 10× (documents) / 5× (embeddings) corpora
+  * with the fixture schemas into /tmp and times the operators whose
+  * cost could grow super-linearly (candidate-pair dedup, similarity
+  * search), printing 1× vs N× wall-clock so scaling exponents are
+  * measured, not guessed. Results land in SCALE.md. Each rep is one
+  * [[graft.Bench.runOnce]], the bench's own timing loop. Usage:
+  *   sbt "runMain graft.tools.ScaleSmoke"
   *
   * Synthesis is fully expression-based (no driver-side data) and
   * deterministic (xxhash64-derived), so runs are comparable.
@@ -44,97 +46,8 @@ object ScaleSmoke {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
-  /** Zipfian-skew documents corpus: word ranks are log-uniform over a
-    * 1000-word vocabulary (frequency ∝ 1/rank — Zipf(1)), so a handful
-    * of hot shingles dominate co-occurrence. This is the regime real
-    * text lives in and where the count join degrades quadratically while
-    * PPJoin's prefix filter drops the hot shingles from candidate
-    * generation. */
-  def synthesizeZipf(spark: SparkSession, dir: String, nDocs: Long): Unit = {
-    spark.range(nDocs)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", expr(
-          """transform(sequence(1, 40 + CAST(pmod(xxhash64(id), 40) AS INT)),
-            | i -> concat('w', CAST(pow(20.0,
-            |   CAST(pmod(xxhash64(concat(CAST(id AS STRING), '~', CAST(i AS STRING))), 100000) AS DOUBLE) / 100000.0)
-            |   AS INT)))""".stripMargin)).as("text"),
-        element_at(array(lit("en"), lit("de"), lit("es"), lit("fr"), lit("zh")),
-          (pmod(xxhash64(col("id") + 7), lit(5)) + 1).cast("int")).as("lang"),
-        concat(lit("src"), pmod(col("id"), lit(20))).as("source"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  /** Templated near-dup corpus: docs come in 10-sibling template
-    * families (9 one-word-mutated copies + the canonical), languages
-    * and lengths are template-keyed so siblings share a dedup block,
-    * and the vocabulary grows with the corpus (pass vocabSize ≈
-    * nDocs/10) so per-shingle document frequency stays scale-invariant
-    * — the shape a real web corpus presents to a dedup pipeline. */
-  def synthesizeTemplated(spark: SparkSession, dir: String, nDocs: Long,
-      vocabSize: Int): Unit = {
-    spark.range(nDocs)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", expr(
-          s"""transform(sequence(1, 40 + CAST(pmod(xxhash64(id div 10), 40) AS INT)),
-             | i -> CASE WHEN id % 10 <> 0 AND i = 1 + CAST(pmod(xxhash64(id), 40) AS INT)
-             |   THEN concat('m', CAST(id AS STRING))
-             |   ELSE concat('w', CAST(pmod(xxhash64(concat(
-             |     CAST(id div 10 AS STRING), '_', CAST(i AS STRING))), $vocabSize) AS STRING))
-             |   END)""".stripMargin)).as("text"),
-        element_at(array(lit("en"), lit("de"), lit("es"), lit("fr"), lit("zh")),
-          (pmod(xxhash64(expr("id div 10") + 7), lit(5)) + 1).cast("int")).as("lang"),
-        concat(lit("src"), pmod(col("id"), lit(20))).as("source"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  /** Clustered embeddings corpus: members come in `clusterSize`-vector
-    * families around a shared hash-derived center plus small noise —
-    * the near-dup regime IVF exists for (tight cells, strong triangle
-    * pruning). Deterministic and expression-based like the rest. */
-  def synthesizeClusteredVecs(spark: SparkSession, dir: String, nVecs: Long,
-      clusterSize: Int): Unit = {
-    spark.range(nVecs)
-      .select(col("id").as("vec_id"),
-        expr(
-          s"""transform(sequence(1, 64),
-             | i -> CAST((CAST(pmod(xxhash64(concat(CAST(id div $clusterSize AS STRING), '@', CAST(i AS STRING))), 2000) AS DOUBLE) / 1000.0 - 1.0)
-             |  + 0.03 * (CAST(pmod(xxhash64(concat(CAST(id AS STRING), '%', CAST(i AS STRING))), 2000) AS DOUBLE) / 1000.0 - 1.0) AS FLOAT))""".stripMargin)
-          .as("embedding"),
-        pmod(col("id"), lit(3)).cast("int").as("label"))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-  }
-
   def main(args: Array[String]): Unit = {
-    // FAIR-pool measurement arm (VERDICT r14 #5): arm FAIR scheduling
-    // with a down-weighted graft_maintenance pool BEFORE the context
-    // starts (SparkConf reads spark.* system properties), so a
-    // COMPACTLIVE leg can measure whether pool weighting trims the
-    // residual live-vs-solo contention — compactLog's staging jobs
-    // racing micro-batch jobs for executor slots.
-    if (sys.env.contains("SPARK_GRAFT_FAIR")) {
-      val xml = java.nio.file.Files.createTempFile("graft_fair", ".xml")
-      java.nio.file.Files.write(xml,
-        """<?xml version="1.0"?>
-          |<allocations>
-          |  <pool name="default">
-          |    <schedulingMode>FIFO</schedulingMode>
-          |    <weight>8</weight>
-          |    <minShare>24</minShare>
-          |  </pool>
-          |  <pool name="graft_maintenance">
-          |    <schedulingMode>FIFO</schedulingMode>
-          |    <weight>1</weight>
-          |    <minShare>0</minShare>
-          |  </pool>
-          |</allocations>
-          |""".stripMargin.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      sys.props("spark.scheduler.mode") = "FAIR"
-      sys.props("spark.scheduler.allocation.file") = xml.toString
-      println(s"FAIR pools armed (allocation file $xml)")
-    }
-    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.create()
     val base = "/root/testdata/sf0.1"
     val big = "/tmp/graft_scale"
     synthesize(spark, big, nDocs = 50000L, nVecs = 10000L)
@@ -143,1895 +56,14 @@ object ScaleSmoke {
       "q45_simhash", "q46_text_quality", "q48_fingerprint",
       "q49_cosine_topk", "q50_embedding_neardup", "q51_ann_lsh")
 
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+    def run(name: String, dir: String): Double = Bench.runOnce(spark, name, dir)
+    println(f"${"op"}%-26s ${"1x(sf0.1)"}%10s ${"10x-docs/5x-vecs"}%16s ${"ratio"}%7s")
+    ops.foreach { name =>
+      run(name, base) // warm: whole-stage codegen compiles once, untimed
+      val t1 = run(name, base)
+      val t2 = run(name, big)
+      println(f"SCALE $name%-26s $t1%10.2f $t2%16.2f ${t2 / t1}%7.1f")
     }
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // CC-only mode: connected components through the FORCED distributed
-    // star rounds (union-find finish disabled) on a chain-heavy graph —
-    // the diameter-adversarial shape where label propagation would need
-    // O(diameter) rounds. 2^16-node chain + 500k random edges / 600k
-    // nodes.
-    if (sys.env.contains("SPARK_GRAFT_CC_ONLY")) {
-      import graft.plans.ConnectedComponents
-      val chain = spark.range(65536L).select((col("id") + 1).as("a"), col("id").as("b"))
-      val rand = spark.range(500000L).select(
-        pmod(xxhash64(col("id")), lit(600000L)).as("a"),
-        pmod(xxhash64(col("id") + 13), lit(600000L)).as("b"))
-      chain.union(rand).write.mode("overwrite").parquet("/tmp/graft_cc/edges.parquet")
-      val e = spark.read.parquet("/tmp/graft_cc/edges.parquet")
-      // components() is eager (star rounds run inside the call), so keep
-      // the last result: its final label join reads checkpointed state
-      // and the stats below cost one cheap job, not a third full CC run.
-      var last: org.apache.spark.sql.DataFrame = null
-      def ccRun(): Double =
-        time { last = ConnectedComponents.components(e, smallGraphEdges = 0L); noop(last) }
-      val t = math.min(ccRun(), ccRun())
-      val comp = last.agg(countDistinct(col("label")), count(lit(1))).head()
-      println(f"CC star-rounds 566k-edge chain-heavy graph $t%7.2f s " +
-        f"(${comp.getLong(0)} components over ${comp.getLong(1)} nodes)")
-      spark.stop()
-      return
-    }
-
-    // Round-4 ops mode: scaling check for the curation operators added
-    // in round 4 (documents/embeddings-based only — the synthetic big
-    // corpus has no TPC-H tables). Expected: all near-linear except
-    // q89, whose language-only blocking makes cost track within-
-    // language co-occurrence volume (documented in SCALE.md).
-    if (sys.env.contains("SPARK_GRAFT_R4_ONLY")) {
-      val r4ops = Seq("q84_semdedup", "q85_chunk_dedup", "q87_anchor_classify",
-        "q89_containment", "q90_quality_gate")
-      println(f"${"op"}%-26s ${"1x(sf0.1)"}%10s ${"10x-docs/5x-vecs"}%16s ${"ratio"}%7s")
-      r4ops.foreach { name =>
-        run(name, base) // warm
-        val t1 = run(name, base)
-        val t2 = run(name, big)
-        println(f"SCALE $name%-26s $t1%10.2f $t2%16.2f ${t2 / t1}%7.1f")
-      }
-      spark.stop()
-      return
-    }
-
-    // Round-7 ops mode: document-based mining operators at 1× vs 10×
-    // (all expected near-linear: q110/q111 are aggregate+join-back
-    // shapes, q113 generates exactly w·n pairs, q116 is MG + recount),
-    // then the SNM headline measurement: on the Zipfian corpus whose
-    // hot shingles blow up q43's inverted-index count join, sorted-
-    // neighborhood pairing stays linear — the two dedup blockers scale
-    // on DIFFERENT axes (co-occurrence volume vs corpus size).
-    if (sys.env.contains("SPARK_GRAFT_R7_ONLY")) {
-      val r7ops = Seq("q110_dup_ngram_fraction", "q111_collocations",
-        "q113_sorted_neighborhood", "q116_heavy_hitters")
-      println(f"${"op"}%-26s ${"1x(sf0.1)"}%10s ${"10x-docs"}%10s ${"ratio"}%7s")
-      r7ops.foreach { name =>
-        run(name, base) // warm
-        val t1 = run(name, base)
-        val t2 = run(name, big)
-        println(f"SCALE $name%-26s $t1%10.2f $t2%10.2f ${t2 / t1}%7.1f")
-      }
-      val zdir = "/tmp/graft_zipf_r7"
-      synthesizeZipf(spark, zdir, 50000L)
-      Seq("q43_ngram_jaccard", "q113_sorted_neighborhood").foreach { name =>
-        run(name, zdir) // warm
-        val t = run(name, zdir)
-        println(f"ZIPF50K $name%-26s $t%10.2f s")
-      }
-      spark.stop()
-      return
-    }
-
-    // BFS checkpoint-cadence mode (r6 verdict #5): 3 min-distance
-    // rounds over a 20M-directed-edge (10× the sf0.1 order graph)
-    // random bipartite graph, checkpointing every 1 / 2 / 3 rounds.
-    // Trade measured: each checkpoint materializes a node-sized table;
-    // each SKIPPED checkpoint doubles the replayed lineage of the next
-    // round's two consumers.
-    if (sys.env.contains("SPARK_GRAFT_BFS_CADENCE")) {
-      import graft.operators.GraphOps
-      val e0 = spark.range(10000000L).select(
-        pmod(xxhash64(col("id")), lit(600000L)).as("src"),
-        (pmod(xxhash64(col("id") + 3), lit(600000L)) + 600000L).as("dst"))
-      e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .write.mode("overwrite").parquet("/tmp/graft_bfs/edges.parquet")
-      val edges = spark.read.parquet("/tmp/graft_bfs/edges.parquet")
-      val seeds = spark.range(5L).select((col("id") * 2 + 1).as("id"))
-      Seq(1, 2, 3).foreach { every =>
-        def go(): Double = time(noop(
-          GraphOps.bfsLevels(edges, seeds, rounds = 3, checkpointEvery = every)
-            .groupBy("dist").agg(count(lit(1)).as("cnt"))))
-        go() // warm
-        val t = math.min(go(), go())
-        println(f"BFSCADENCE checkpointEvery=$every $t%7.2f s (20M sym edges, 3 rounds)")
-      }
-      spark.stop()
-      return
-    }
-
-    // Pair-graph-only mode (r7 verdict #5): time JUST the exact t=0.3
-    // pair graph (uncached form) on the templated 100× corpus — the
-    // measured 2/3 of q82's cost — for iterating on the aggregate
-    // shape without paying the full DEDUP100X protocol.
-    if (sys.env.contains("SPARK_GRAFT_PAIRGRAPH_ONLY")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      def pg(dir: String): Double = time(noop(
-        graft.operators.LlmOps.jaccardCountJoinAt(spark, dir, 3)))
-      // warm BOTH scales before timing (the DEDUP100X lesson: an
-      // unwarmed 100× rep pays first-touch page cache + codegen and
-      // biases the per-unit ratio upward)
-      pg(d10) // warm
-      val t10 = math.min(pg(d10), pg(d10))
-      pg(d100) // warm
-      val t100 = math.min(pg(d100), pg(d100))
-      println(f"PAIRGRAPH 10x(50k) $t10%8.2f  100x(500k) $t100%9.2f" +
-        f"  per-unit ${(t100 / t10) / 10.0}%5.2f")
-      // The BUCKETED shared build (r8 verdict #4): cold = saveAsTable
-      // inventory write + self-join (the once-per-snapshot cost);
-      // steady = self-join over the existing bucketed table — the
-      // exchange-free form every pair-graph consumer now reads.
-      def bpg(dir: String): Double = time(noop(
-        graft.operators.LlmOps.bucketedPairStats(spark, dir)))
-      val bc10 = bpg(d10) // cold: builds the bucketed table
-      val bt10 = math.min(bpg(d10), bpg(d10))
-      val bc100 = bpg(d100)
-      val bt100 = math.min(bpg(d100), bpg(d100))
-      println(f"PAIRGRAPH-BUCKETED 10x(50k) $bt10%8.2f  100x(500k) $bt100%9.2f" +
-        f"  per-unit ${(bt100 / bt10) / 10.0}%5.2f" +
-        f"  [cold 10x $bc10%8.2f 100x $bc100%9.2f]")
-      spark.stop()
-      return
-    }
-
-    // Fixed-delta probe mode: the q255 claim stated honestly — "per-day
-    // cost ∝ delta" — measured with the SAME 5k-doc delta against a 50k
-    // vs 500k corpus. The index side (shingle inventory) is built and
-    // checkpointed UNTIMED, modeling the persisted per-snapshot
-    // artifact a production pipeline reads; only the delta probe
-    // (filter + explode + inverted-index join + verify) is timed.
-    if (sys.env.contains("SPARK_GRAFT_DELTA_ONLY")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      for ((tag, dir, minId) <- Seq(("50k", d10, 45000L), ("500k", d100, 495000L))) {
-        val sh = graft.operators.LlmOps.shingleBlocks(spark, dir)
-          .localCheckpoint() // untimed: the persisted index
-        def probe(): Double = time(noop(graft.operators.LlmOps.deltaNearDupProbe(
-          sh, sh.where(col("doc_id") >= minId), 8)))
-        probe() // warm
-        val t = math.min(probe(), probe())
-        println(f"DELTAPROBE corpus $tag%-6s delta 5k docs $t%8.2f s (checkpointed inventory)")
-        // bucketed-table route (q255b layout): index written untimed,
-        // probe joins it exchange-free on the corpus side
-        val idx = graft.operators.LlmOps.bucketedShingleIndex(spark, dir)
-        val deltaSh = graft.operators.LlmOps.shingleBlocks(spark, dir)
-          .where(col("doc_id") >= minId)
-        // the SHARED q255b probe body — the smoke always times the
-        // plan the declared query ships
-        def probeB2(): Double = time(noop(graft.operators.LlmOps.bucketedDeltaPairs(
-          idx, deltaSh, graft.operators.LlmOps.productionThreshold10)))
-        probeB2() // warm
-        val tb = math.min(probeB2(), probeB2())
-        println(f"DELTAPROBE corpus $tag%-6s delta 5k docs $tb%8.2f s (bucketed table, q255b)")
-      }
-      spark.stop()
-      return
-    }
-
-    // SimHash-at-100× mode (r7 verdict #7): q216 on the TEMPLATED
-    // Heaps-vocab corpus (vocab = nDocs/10 — the production regime the
-    // round-7 30-word-synthetic measurement could not speak to), 50k
-    // vs 500k docs, warm reps both scales, plus the banding fan-out
-    // profile (per-band bucket count / max bucket / Σsz² candidate
-    // volume over distinct signatures) and the output pair count.
-    if (sys.env.contains("SPARK_GRAFT_SIMHASH100X")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      def one(name: String, dir: String): Double = time(noop(
-        SparkEntry.queries(name)(spark, dir)))
-      // SPARK_GRAFT_SIMHASH100X=64 measures only the 64-bit scale path
-      // (the 32-bit form's 100× rep alone is ~4 minutes — measured once,
-      // recorded in SCALE.md round 8). =routed measures only q216c (the
-      // r9 router: expansion branch at 500k's signature diversity).
-      val mode = sys.env.getOrElse("SPARK_GRAFT_SIMHASH100X", "")
-      val variants: Seq[(String, () => (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-        if (mode == "routed")
-          Seq(("q216c_simhash_neighbors_routed",
-            () => graft.operators.LlmOps.simhashBandProfile _))
-        else (if (mode == "64") Seq.empty else Seq(
-          ("q216_simhash_neighbors", () => graft.operators.LlmOps.simhashBandProfile _))) :+
-          (("q216b_simhash64_neighbors", () => graft.operators.LlmOps.simhash64BandProfile _))
-      for ((name, profile) <- variants;
-           (tag, dir) <- Seq(("10x(50k)", d10), ("100x(500k)", d100))) {
-        // the warm rep doubles as the output materialization: counting
-        // its checkpointed result later is free, instead of a fourth
-        // full pipeline execution (~4 min at 100× for the 32-bit form)
-        val warm = SparkEntry.queries(name)(spark, dir).localCheckpoint()
-        val t = math.min(one(name, dir), one(name, dir))
-        val nOut = warm.count()
-        println(f"SIMHASH100X $name%-26s $tag%-11s $t%8.2f s  out_pairs $nOut%10d")
-        profile()(spark, dir).collect().foreach { r =>
-          println(f"SIMHASH100X $name%-26s $tag%-11s band ${r.getInt(0)}" +
-            f" n_buckets ${r.getLong(1)}%6d max_bucket ${r.getLong(2)}%8d" +
-            f" cand_volume ${r.getLong(3)}%12d")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    // IVF-at-scale mode (r8 verdict #3): the IVF-routed exact pair ops
-    // on CLUSTERED corpora at 10× (20k) and 100× (200k) vectors over
-    // the sf0.1 base (2000), exercising the size-derived constants
-    // (nlist = √n, nprobe = log₂ nlist) instead of the old fixed 16/4.
-    // Cost model note for reading the numbers: IVF exact mutual-NN is
-    // Θ(n^1.5) on a clustered corpus (n vectors × √n-deep probed
-    // cells), so the honest per-unit expectation for (t100/t10)/10 is
-    // √10 ≈ 3.2 — per-unit ≈ 10 would mean quadratic; ≈ 1 would mean
-    // the probe never got deeper. The threshold route is measured at
-    // t = 0.9 (the near-dup regime): at 64 dims random directions
-    // concentrate at |cos| ≲ 3/√64 ≈ 0.37, so a 0.35 threshold on any
-    // space-filling corpus has output quadratic in n by definition of
-    // the task — out_pairs is printed so output-boundedness is
-    // visible. Warm-both-scales per the DEDUP100X protocol; cold rep
-    // (= the once-per-snapshot index build + first probe) printed too.
-    // q283 amortization split (VERDICT r10 #5): SCALE.md round 10
-    // argued the purity certificate's super-linear component is the
-    // shared NN machinery a pipeline has already paid — assert it by
-    // timing the three layers separately at 100× clustered: (a) the
-    // once-per-snapshot cachedIndex build the whole ANN family
-    // amortizes, (b) the 1-NN probe pass (shared verbatim with q222b's
-    // mutual-NN — nearestNeighbors is the same code path), (c) the
-    // MARGINAL q283 rollup over a materialized NN frame, which must be
-    // labels-×-corpus-linear (sub-second class, nothing pair-shaped).
-    if (sys.env.contains("SPARK_GRAFT_Q283AMORT")) {
-      import graft.operators.{IvfAnn, PipelineOps}
-      val v100 = "/tmp/graft_ivf100x"
-      synthesizeClusteredVecs(spark, v100, nVecs = 200000L, clusterSize = 16)
-      val tIdx = time { IvfAnn.cachedIndex(spark, v100); () }
-      var nn: org.apache.spark.sql.DataFrame = null
-      val tNnCold = time { nn = IvfAnn.computeNearestNeighbors(spark, v100) }
-      // computeNearestNeighbors returns an eagerly-checkpointed frame,
-      // so the construction above IS the probe pass; a second pass
-      // re-runs it (the UNCACHED form — production consumers share one
-      // pass through the nearestNeighbors memo)
-      val tNn = time { IvfAnn.computeNearestNeighbors(spark, v100); () }
-      def roll(): Unit = noop(PipelineOps.labelPurityRollup(spark, v100, nn))
-      roll() // warm
-      val tRoll = math.min(time(roll()), time(roll()))
-      println(f"Q283AMORT 100x(200k clustered)  index_build $tIdx%8.2f s  " +
-        f"nn_pass $tNn%8.2f s (cold $tNnCold%8.2f)  rollup_marginal $tRoll%8.2f s")
-      spark.stop()
-      return
-    }
-
-    // Restart-at-10× mode (rides VERDICT r10 #1/#7): the StreamingSpec
-    // kill/resume laws run at fixture scale; this leg measures the
-    // SAME contract at the STREAM10X corpus size — nearDupStream over
-    // 50k templated docs, killed at the halfway batch and resumed from
-    // the same checkpoint. Reported: time-to-first-committed-batch
-    // after the restart (the RocksDB store reload + replay cost),
-    // per-segment throughput, and the final state-row total, which
-    // must EQUAL an uninterrupted control run's (the footprint law at
-    // scale).
-    if (sys.env.contains("SPARK_GRAFT_RESTART10X")) {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.streaming.StreamingQuery
-      import graft.streaming.Streaming
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val d10 = "/tmp/graft_dedup10x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      val docsAll = spark.read.parquet(s"$d10/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect().toSeq.sortBy(_._1)
-      def stateRows(q: StreamingQuery): Long =
-        Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-          .map(_.numRowsTotal).sum
-      def startQ(mem: MemoryStream[(Long, String)], ckpt: String): StreamingQuery =
-        Streaming.nearDupStream(mem.toDS().toDF("doc_id", "text"),
-            graft.operators.LlmOps.productionThreshold10,
-            java.time.Duration.ofHours(1))
-          .writeStream
-          .foreachBatch((b: org.apache.spark.sql.Dataset[Streaming.NearDupPair],
-              _: Long) => b.write.format("noop").mode("overwrite").save())
-          .option("checkpointLocation", ckpt)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update).start()
-      def withCounter[A](q: StreamingQuery)(f: java.util.concurrent.atomic.AtomicLong => A): A = {
-        val seen = new java.util.concurrent.atomic.AtomicLong(0)
-        val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit =
-            if (e.progress.id == q.id) { seen.addAndGet(e.progress.numInputRows); () }
-        }
-        spark.streams.addListener(listener)
-        try f(seen) finally spark.streams.removeListener(listener)
-      }
-      def feed(mem: MemoryStream[(Long, String)], q: StreamingQuery,
-          seen: java.util.concurrent.atomic.AtomicLong,
-          docs: Seq[(Long, String)]): Double = {
-        val t0 = System.nanoTime()
-        var fed = 0L
-        docs.grouped(1000).foreach { c =>
-          mem.addData(c); fed += c.size
-          val deadline = System.nanoTime() + 120L * 1000000000L
-          while (seen.get() < fed) {
-            q.exception.foreach(throw _)
-            if (System.nanoTime() > deadline)
-              sys.error(s"RESTART10X stalled: ${seen.get()}/$fed rows after 120 s")
-            Thread.sleep(20)
-          }
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      def settleRows(q: StreamingQuery, want: Long): Long = {
-        // progress metrics can lag a self-triggered batch
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        while (stateRows(q) != want && System.nanoTime() < deadline) Thread.sleep(250)
-        stateRows(q)
-      }
-      val half = docsAll.size / 2
-
-      // uninterrupted control
-      val memC = MemoryStream[(Long, String)]
-      val qC = startQ(memC,
-        java.nio.file.Files.createTempDirectory("graft_rst_ckc").toString)
-      var controlRows = 0L
-      var tControl = 0.0
-      try {
-        tControl = withCounter(qC)(seen => feed(memC, qC, seen, docsAll))
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        while (stateRows(qC) == 0 && System.nanoTime() < deadline) Thread.sleep(250)
-        controlRows = stateRows(qC)
-      } finally qC.stop()
-      println(f"RESTART10X control      50k docs in $tControl%7.2f s  state_rows $controlRows%9d")
-
-      // kill at half, resume from the same checkpoint
-      val mem = MemoryStream[(Long, String)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_rst_ckpt").toString
-      val q1 = startQ(mem, ckpt)
-      val tSeg1 = try withCounter(q1)(seen => feed(mem, q1, seen, docsAll.take(half)))
-        finally q1.stop()
-      val tR0 = System.nanoTime()
-      val q2 = startQ(mem, ckpt)
-      try {
-        val deadline = System.nanoTime() + 120L * 1000000000L
-        while (q2.lastProgress == null && System.nanoTime() < deadline) {
-          q2.exception.foreach(throw _); Thread.sleep(20)
-        }
-        val tRecover = (System.nanoTime() - tR0) / 1e9
-        val tSeg2 = withCounter(q2)(seen => feed(mem, q2, seen, docsAll.drop(half)))
-        val finalRows = settleRows(q2, controlRows)
-        println(f"RESTART10X kill@25k     seg1 $tSeg1%7.2f s  recover $tRecover%6.2f s  " +
-          f"seg2 $tSeg2%7.2f s  state_rows $finalRows%9d  " +
-          f"rows_equal ${finalRows == controlRows}")
-        assert(finalRows == controlRows,
-          s"restarted state rows $finalRows != uninterrupted $controlRows")
-      } finally q2.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.stop()
-      return
-    }
-
-    // Adjacency-recursion mode (VERDICT r10 #2): time the flat ncells²
-    // adjacency build against the grouped (recursive) build on
-    // synthetic centroid sets of growing size, and pin where the
-    // crossover sits. The fixture is a HIERARCHICAL centroid set (256
-    // well-separated regions, tiny per-cell radii) — the geometry a
-    // refined index over a clustered corpus actually produces (cells
-    // are splits of natural clusters, so the centroid set inherits the
-    // hierarchy). On a hierarchy-free centroid set (uniform tiny
-    // islands in 64 dims) NO coarse grouping can prune — sphere caps
-    // that cover in high dimension are necessarily wide — so the
-    // recursion targets exactly the clustered regime the refined route
-    // itself requires (an incoherent corpus routes to allpairs long
-    // before adjacency is built).
-    // Survival-gate overhead on a NO-PRUNING geometry (round 12, the
-    // ADVICE r11 counterpart to ADJSCALE): incoherent random centroids
-    // with wide radii — the coarse bound rejects (almost) nothing, the
-    // gate measures survival ≈ 1 and hands the fine phase to flat. The
-    // leg prices exactly what a caller pays for the wrong-geometry
-    // attempt: gated-grouped wall − flat wall = the sunk coarse setup
-    // (O(ncells) Lloyd + ngroups² pairs), vs the 2.2× blow-up the
-    // UNGATED grouped build measured at 32k in the r11 ADJSCALE table.
-    // Row equality is asserted (the identity law at smoke scale).
-    if (sys.env.contains("SPARK_GRAFT_ADJGATE")) {
-      import graft.operators.IvfAnn
-      import graft.functions.GraftFunctions
-      GraftFunctions.register(spark)
-      def synthIncoherent(ncells: Long): org.apache.spark.sql.DataFrame =
-        spark.range(0, ncells).select(
-            col("id").as("cell"),
-            expr("""transform(sequence(1, 64),
-              | i -> CAST(pmod(xxhash64(concat(CAST(id AS STRING), '#', CAST(i AS STRING))), 2000) AS DOUBLE) / 1000.0 - 1.0)""".stripMargin)
-              .as("cemb"),
-            lit(1.0).as("radius"))
-          .withColumn("cnrm", sqrt(GraftFunctions.dot(col("cemb"), col("cemb"))))
-          .localCheckpoint()
-      locally { // unmeasured JIT warmup (the ADJSCALE lesson)
-        val w = synthIncoherent(2048L)
-        IvfAnn.groupedCellAdjacency(w, 0.9).count()
-        IvfAnn.flatCellAdjacency(w, 0.9).count()
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      for ((tag, n) <- Seq(("8k", 8192L), ("16k", 16384L))) {
-        val cm = synthIncoherent(n)
-        def steady(f: => Long): (Double, Long) = {
-          var rows = 0L
-          val t1 = time { rows = f }
-          val t2 = time { rows = f }
-          (math.min(t1, t2), rows)
-        }
-        val (tf, nf) = steady(IvfAnn.flatCellAdjacency(cm, 0.9).count())
-        val (tg, ng) = steady(IvfAnn.groupedCellAdjacency(cm, 0.9).count())
-        println(f"ADJGATE $tag%-5s cells $n%7d  flat $tf%8.2f s  gated-grouped $tg%8.2f s  " +
-          f"setup-overhead ${tg - tf}%6.2f s  adj_rows $nf%12d  rows_equal ${nf == ng}")
-        assert(nf == ng, s"gated grouped adjacency diverged at $tag: $nf vs $ng")
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_ADJSCALE")) {
-      import graft.operators.IvfAnn
-      import graft.functions.GraftFunctions
-      GraftFunctions.register(spark)
-      def synthCmeta(ncells: Long): org.apache.spark.sql.DataFrame = {
-        val fam = math.max(1L, ncells / 256L)
-        spark.range(0, ncells).select(
-            col("id").as("cell"),
-            expr(s"""transform(sequence(1, 64),
-              | i -> (CAST(pmod(xxhash64(concat(CAST(id div $fam AS STRING), '@', CAST(i AS STRING))), 2000) AS DOUBLE) / 1000.0 - 1.0)
-              |  + 0.05 * (CAST(pmod(xxhash64(concat(CAST(id AS STRING), '%', CAST(i AS STRING))), 2000) AS DOUBLE) / 1000.0 - 1.0))""".stripMargin)
-              .as("cemb"),
-            (lit(0.01) + lit(0.02) * pmod(xxhash64(col("id")), lit(1000)) / lit(1000.0))
-              .as("radius"))
-          .withColumn("cnrm", sqrt(GraftFunctions.dot(col("cemb"), col("cemb"))))
-          .localCheckpoint()
-      }
-      val t = 0.9
-      // unmeasured warmup: the grouped build's Lloyd/aggregate codegen
-      // paths otherwise land entirely on the first measured size (the
-      // first ADJSCALE capture's 8k grouped number carried ~3 s of JIT)
-      locally {
-        val w = synthCmeta(2048L)
-        IvfAnn.groupedCellAdjacency(w, t).count()
-        IvfAnn.flatCellAdjacency(w, t).count()
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      for ((tag, n) <- Seq(("8k", 8192L), ("16k", 16384L), ("32k", 32768L),
-          ("100k", 100000L))) {
-        val cm = synthCmeta(n)
-        def steady(f: => Long): (Double, Long) = {
-          var rows = 0L
-          val t1 = time { rows = f }
-          val t2 = time { rows = f }
-          (math.min(t1, t2), rows)
-        }
-        val (tg, ng) = steady(IvfAnn.groupedCellAdjacency(cm, t).count())
-        val (tf, nf) = steady(IvfAnn.flatCellAdjacency(cm, t).count())
-        println(f"ADJSCALE $tag%-5s cells $n%7d  flat $tf%8.2f s  grouped $tg%8.2f s  " +
-          f"adj_rows $nf%10d  rows_equal ${nf == ng}")
-        assert(nf == ng, s"grouped adjacency row count diverged at $tag: $nf vs $ng")
-        // per-size checkpoint hygiene: each grouped build ckpts its
-        // Lloyd frames
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_IVF100X")) {
-      import graft.operators.IvfAnn
-      // Two corpus geometries per scale:
-      //  - FINE (clusterSize 16): natural clusters ≫ nlist — the
-      //    mutual-NN regime (argmax pruning needs only the own-cluster
-      //    cell to be close), but cells aggregate ~n/16/nlist unrelated
-      //    clusters, radius ≈ 90°, so THRESHOLD pruning is impossible:
-      //    the first run of this smoke measured the t=0.9 probe
-      //    degenerating to the all-pairs join at 200k (killed at
-      //    35 min cold). thresholdPrunability() is the planning
-      //    diagnostic that detects this BEFORE paying n²; the smoke
-      //    prints it and skips the measured-degenerate leg.
-      //  - ALIGNED (clusterSize = n/nlist): cells ≈ natural clusters,
-      //    radius stays below acos(0.9) and the threshold route runs
-      //    in its designed Θ(n·cellDepth) = Θ(n^1.5) regime.
-      val v10 = "/tmp/graft_ivf10x"
-      val v100 = "/tmp/graft_ivf100x"
-      val a10 = "/tmp/graft_ivfa10x"
-      val a100 = "/tmp/graft_ivfa100x"
-      synthesizeClusteredVecs(spark, v10, nVecs = 20000L, clusterSize = 16)
-      synthesizeClusteredVecs(spark, v100, nVecs = 200000L, clusterSize = 16)
-      synthesizeClusteredVecs(spark, a10, nVecs = 20000L,
-        clusterSize = (20000L / IvfAnn.nlistFor(20000L)).toInt)
-      synthesizeClusteredVecs(spark, a100, nVecs = 200000L,
-        clusterSize = (200000L / IvfAnn.nlistFor(200000L)).toInt)
-      for ((tag, n) <- Seq(("10x(20k)", 20000L), ("100x(200k)", 200000L))) {
-        val nl = IvfAnn.nlistFor(n)
-        println(s"IVF100X constants $tag nlist=$nl nprobe=${IvfAnn.nprobeFor(nl)}")
-      }
-      def leg(name: String, tag: String, dir: String,
-          f: String => org.apache.spark.sql.DataFrame): Double = {
-        var warm: org.apache.spark.sql.DataFrame = null
-        val cold = time { warm = f(dir).localCheckpoint() }
-        val t = math.min(time(noop(f(dir))), time(noop(f(dir))))
-        val nOut = warm.count()
-        println(f"IVF100X $name%-22s $tag%-12s cold $cold%8.2f  steady $t%8.2f s  out_pairs $nOut%9d")
-        t
-      }
-      def perUnit(name: String, t10: Double, t100: Double): Unit =
-        println(f"IVF100X $name%-22s per-unit ${(t100 / t10) / 10.0}%5.2f (n^1.5 model predicts 3.2)")
-      val mode = sys.env.getOrElse("SPARK_GRAFT_IVF100X", "")
-      if (mode == "" || mode == "mnn") {
-        def mnn(d: String) = SparkEntry.queries("q222b_mutual_nn_ivf")(spark, d)
-        val m10 = leg("q222b_mutual_nn_ivf", "10x(20k)", v10, mnn)
-        val m100 = leg("q222b_mutual_nn_ivf", "100x(200k)", v100, mnn)
-        perUnit("q222b_mutual_nn_ivf", m10, m100)
-      }
-      def thr(d: String) = IvfAnn.thresholdPairsExact(spark, d, 0.9)
-      // =thresh runs all four geometries in one session; the fine legs'
-      // refined-index checkpoints and 1.65M pinned output rows then
-      // pressure the aligned100x steady reps (measured: 69 s vs 15 s
-      // standalone) — =aligned isolates the flat-route legs for a clean
-      // capture, =fine the refined ones.
-      val legFilter: String => Boolean = mode match {
-        case "aligned" => _.startsWith("aligned")
-        case "fine" => _.startsWith("fine")
-        case _ => _ => true
-      }
-      for ((tag, dir) <- Seq(("fine10x", v10), ("fine100x", v100),
-          ("aligned10x", a10), ("aligned100x", a100)) if legFilter(tag)) {
-        val pr = IvfAnn.thresholdPrunability(IvfAnn.cachedIndex(spark, dir), 0.9)
-        println(f"IVF100X thresholdPairs(t0.9) $tag%-12s prunability $pr%5.2f")
-        if (pr > 0.0) leg("thresholdPairs(t0.9)", tag, dir, thr)
-        else {
-          // r9 verdict #1: where round 9 SKIPPED (flat probe provably
-          // all-pairs; killed at 35 min cold at 200k), the router now
-          // REFINES the quantizer. Time the once-per-(corpus,t) refined
-          // build (split k-means + adjacency + volume probe), print the
-          // route, and measure the routed probe like any other leg.
-          val tBuild = time { IvfAnn.cachedRefined(spark, dir, 0.9); () }
-          val r = IvfAnn.cachedRefined(spark, dir, 0.9)
-          val (route, _) = IvfAnn.adaptiveThresholdPairs(spark, dir, 0.9)
-          println(f"IVF100X refined-quantizer $tag%-12s build $tBuild%8.2f s  " +
-            f"cells ${r.idx.nlist}%6d  route=$route  " +
-            f"probeVol ${r.probeVolume}%.3g vs allPairs ${r.allPairsVolume}%.3g")
-          leg("thresholdRouted(t0.9)", tag, dir,
-            d => IvfAnn.adaptiveThresholdPairs(spark, d, 0.9)._2)
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    // Streaming-at-10× mode (r9 verdict #2): sustained throughput and
-    // state-store footprint for the three stateful streaming operators
-    // that had parity laws but no scale rows. Each leg replays a
-    // deterministic corpus through a MemoryStream in fixed-size
-    // micro-batches against the RocksDB state store (the provider the
-    // TTL/TWS operators require), reporting rows/s and the final
-    // state-operator totals (numRowsTotal / memoryUsedBytes). The TTL
-    // horizon is set beyond the run, so the reported state is the
-    // WORST-CASE footprint of one TTL window's arrivals — the bound the
-    // StreamingSpec eviction law certifies; per-row cost flat across
-    // 1×→10× is the pass criterion (state lookups are per-key, never
-    // per-corpus).
-    if (sys.env.contains("SPARK_GRAFT_STREAM10X")) {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.streaming.StreamingQuery
-      import graft.streaming.Streaming
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      def stateTotals(q: StreamingQuery): (Long, Double) = {
-        val so = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-        (so.map(_.numRowsTotal).sum, so.map(_.memoryUsedBytes).sum / 1e6)
-      }
-      def report(op: String, tag: String, n: Long, secs: Double,
-          q: StreamingQuery): Unit = {
-        val (rows, mb) = stateTotals(q)
-        println(f"STREAM10X $op%-14s $tag%-10s $n%8d rows in $secs%7.2f s " +
-          f"(${n / secs}%9.0f rows/s)  state_rows $rows%9d  state_mb $mb%8.1f")
-      }
-
-      // nearDupStream: templated near-dup corpus (the q44 regime), 1000-
-      // doc micro-batches. State = per-band-bucket ListState members.
-      // TTL ⇒ TimeMode.ProcessingTime ⇒ the query self-triggers empty
-      // batches continuously, so processAllAvailable never settles —
-      // chunk completion is gated on a listener-accumulated input-row
-      // counter instead (recentProgress churns under the empty batches,
-      // so polling it would under-count).
-      val d10 = "/tmp/graft_dedup10x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      val docsAll = spark.read.parquet(s"$d10/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect().toSeq.sortBy(_._1)
-      for ((tag, n) <- Seq(("1x(5k)", 5000), ("10x(50k)", 50000))) {
-        val mem = MemoryStream[(Long, String)]
-        val q = Streaming.nearDupStream(mem.toDS().toDF("doc_id", "text"),
-            graft.operators.LlmOps.productionThreshold10,
-            java.time.Duration.ofHours(1))
-          .writeStream.format("noop")
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update).start()
-        val seen = new java.util.concurrent.atomic.AtomicLong(0)
-        val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit =
-            if (e.progress.id == q.id) { seen.addAndGet(e.progress.numInputRows); () }
-        }
-        spark.streams.addListener(listener)
-        try {
-          val t0 = System.nanoTime()
-          var fed = 0L
-          docsAll.take(n).grouped(1000).foreach { c =>
-            mem.addData(c); fed += c.size
-            // Bounded wait that surfaces a dead query: with no deadline
-            // a processor failure (no further progress events) would
-            // spin this loop forever instead of raising the exception.
-            val deadline = System.nanoTime() + 120L * 1000000000L
-            while (seen.get() < fed) {
-              q.exception.foreach(throw _)
-              if (System.nanoTime() > deadline)
-                sys.error(s"STREAM10X nearDup stalled: ${seen.get()}/$fed rows after 120 s")
-              Thread.sleep(20)
-            }
-          }
-          report("nearDupStream", tag, n.toLong, (System.nanoTime() - t0) / 1e9, q)
-        } finally { q.stop(); spark.streams.removeListener(listener) }
-      }
-
-      // yieldFunnelStream: the q287 gate cascade as row-local HOFs plus
-      // the stateful exact-dedup keeper election; state = one boolean
-      // per distinct SURVIVING text (the smallest state of the family).
-      // No TTL ⇒ no self-triggering ⇒ processAllAvailable settles.
-      val docsSrc = spark.read.parquet(s"$d10/documents.parquet")
-        .select(col("doc_id"), col("text"), col("source"))
-        .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
-      for ((tag, n) <- Seq(("1x(5k)", 5000), ("10x(50k)", 50000))) {
-        val mem = MemoryStream[(Long, String, String)]
-        val q = Streaming.yieldFunnelStream(
-            mem.toDS().toDF("doc_id", "text", "source"))
-          .writeStream.format("noop")
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-        try {
-          val t0 = System.nanoTime()
-          docsSrc.take(n).grouped(1000).foreach { c =>
-            mem.addData(c); q.processAllAvailable()
-          }
-          report("funnelStream", tag, n.toLong, (System.nanoTime() - t0) / 1e9, q)
-        } finally q.stop()
-      }
-
-      // upsertStream: CDC rows over a key space 10% of the row volume
-      // (every key sees ~10 versions). State = one ValueState row per
-      // live key; 50k-row micro-batches.
-      for ((tag, nRows, nKeys) <- Seq(("1x(100k)", 100000, 10000),
-          ("10x(1M)", 1000000, 100000))) {
-        val rows = (0 until nRows).map { i =>
-          Streaming.CdcRow(i % nKeys, if (i % 3 == 0) "A" else "B",
-            (i * 7 % 100000).toLong, i / nKeys)
-        }
-        val mem = MemoryStream[Streaming.CdcRow]
-        val q = Streaming.upsertStream(mem.toDS())
-          .writeStream.format("noop")
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update).start()
-        try {
-          val t0 = System.nanoTime()
-          rows.grouped(50000).foreach { c => mem.addData(c); q.processAllAvailable() }
-          report("upsertStream", tag, nRows.toLong, (System.nanoTime() - t0) / 1e9, q)
-        } finally q.stop()
-      }
-
-      // annStream: query vectors against a prebuilt 20k-vector clustered
-      // IVF index (stream-static — stateless, so the row is pure probe
-      // throughput); 200-query micro-batches through the noop emit.
-      val vdir = "/tmp/graft_ivf10x"
-      synthesizeClusteredVecs(spark, vdir, nVecs = 20000L, clusterSize = 16)
-      val corpus = graft.operators.IvfAnn.fullCorpus(spark, vdir)
-      val index = graft.operators.IvfAnn.cachedIndex(spark, vdir)
-      val queriesAll = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-        .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
-      for ((tag, n) <- Seq(("1x(200q)", 200), ("10x(2000q)", 2000))) {
-        val mem = MemoryStream[(Long, Seq[Float])]
-        val q = Streaming.annStream(
-          mem.toDS().toDF("query_id", "embedding"), corpus, index, k = 5,
-          (df, _) => df.write.format("noop").mode("overwrite").save())
-        try {
-          val t0 = System.nanoTime()
-          queriesAll.take(n).grouped(200).foreach { c =>
-            mem.addData(c); q.processAllAvailable()
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          println(f"STREAM10X annStream      $tag%-10s $n%8d queries in $secs%7.2f s " +
-            f"(${n / secs}%9.1f queries/s)  [stream-static: no state operator]")
-        } finally q.stop()
-      }
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.stop()
-      return
-    }
-
-    // Maintainer append cost (r10: appendToIndex is O(delta), not
-    // O(corpus)): seed a 20k-vector clustered index, apply 40
-    // 1000-vector batches through IvfMaintainer.applyBatch
-    // (compactEvery=16 so two compactions land inside the run), and
-    // report each batch's wall time plus first-half/second-half
-    // summaries of the NON-compact batches. Flat halves while the
-    // corpus doubles 20k→60k is the O(delta) evidence; the compact
-    // rows price the periodic full re-checkpoint (the bounded
-    // union-chain-depth cost).
-    if (sys.env.contains("SPARK_GRAFT_MAINT10X")) {
-      import graft.operators.IvfAnn
-      import graft.streaming.Streaming
-      val vdir = "/tmp/graft_maint10x"
-      synthesizeClusteredVecs(spark, vdir, nVecs = 60000L, clusterSize = 16)
-      val all = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val m = new Streaming.IvfMaintainer(
-        IvfAnn.fullCorpus(spark, vdir).filter(col("vec_id") < 20000L),
-        rebuildWhen = _ => false, compactEvery = 16)
-      val compacts = Seq.newBuilder[Int]
-      val normals = Seq.newBuilder[(Int, Double)]
-      for (b <- 0 until 40) {
-        val lo = 20000L + 1000L * b
-        val batch = all.filter(col("vec_id") >= lo && col("vec_id") < lo + 1000L)
-        val t0 = System.nanoTime()
-        m.applyBatch(batch, b.toLong)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val isCompact = (b + 1) % 16 == 0
-        if (isCompact) compacts += b else normals += ((b, secs))
-        println(f"MAINT10X batch $b%3d ${if (isCompact) "compact" else "append "}%s $secs%7.2f s")
-      }
-      val ns = normals.result()
-      def half(xs: Seq[(Int, Double)]): String = {
-        val t = xs.map(_._2).sorted
-        f"min ${t.head}%5.2f median ${t(t.size / 2)}%5.2f max ${t.last}%5.2f"
-      }
-      val (h1, h2) = ns.partition(_._1 < 20)
-      println(s"MAINT10X append-cost first-half(20k->40k corpus): ${half(h1)}")
-      println(s"MAINT10X append-cost second-half(40k->60k corpus): ${half(h2)}")
-      val total = m.index.assigned.count()
-      println(s"MAINT10X final index members: $total (expect 60000)")
-      spark.stop()
-      return
-    }
-
-    // Live-compaction latency tax (round 13): the runbook sends
-    // latency-sensitive deployments to a maintenance-thread compactLog
-    // "off the hot path" — but compactLog SHARES the maintainer's
-    // monitor with applyBatch (that is what makes it crash-safe under a
-    // live stream), so the one micro-batch that arrives DURING a
-    // compaction waits for its full wall (∝ corpus). This leg
-    // quantifies that: the MAINT10X feed (20k seed + 40 × 1000-vector
-    // batches) once solo and once with a maintenance thread compacting
-    // every few seconds — p50 batch wall should hold at the solo cost
-    // (batches between compactions are untouched) while the max
-    // approaches the compaction wall (the blocked arrival).
-    if (sys.env.contains("SPARK_GRAFT_COMPACTLIVE10X")) {
-      import graft.operators.IvfAnn
-      import graft.streaming.Streaming
-      // SPARK_GRAFT_COMPACTLIVE10X=100x pins the same claim one decade
-      // up (round 14, the RESTORE100X convention): 200k seed + 40 ×
-      // 10k-vector batches = 600k vectors, where a compaction stages
-      // the FULL corpus — the regime in which the r13 monitor-held
-      // design cost an arriving batch the whole compaction wall. The
-      // two-phase claim is that live max stays ≈ solo max even as the
-      // compaction wall grows with the corpus.
-      val at100 = sys.env.get("SPARK_GRAFT_COMPACTLIVE10X").contains("100x")
-      val legTag = if (at100) "COMPACTLIVE100X" else "COMPACTLIVE10X"
-      val nVecs = if (at100) 600000L else 60000L
-      val seedN = if (at100) 200000L else 20000L
-      val batchSz = if (at100) 10000L else 1000L
-      val cadenceMs = if (at100) 8000L else 4000L
-      val vdir = if (at100) "/tmp/graft_compactlive100x"
-        else "/tmp/graft_compactlive10x"
-      synthesizeClusteredVecs(spark, vdir, nVecs = nVecs, clusterSize = 16)
-      val all = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val seed = IvfAnn.fullCorpus(spark, vdir).filter(col("vec_id") < seedN)
-      def feed(tag: String, withMaint: Boolean): Unit = {
-        val ppath = s"${vdir}_log_$tag"
-        val fs = new org.apache.hadoop.fs.Path(ppath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(ppath), true)
-        val m = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-          compactEvery = 16, persistPath = Some(ppath))
-        @volatile var stop = false
-        @volatile var maintErr: Throwable = null
-        val cWalls = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-        val maint = if (!withMaint) None else Some(new Thread(() => {
-          try {
-            while (!stop) {
-              val t0 = System.nanoTime()
-              // count real compactions by compactLog's OWN report
-              // (ADVICE r13: the old 0.5 s wall heuristic missed fast
-              // real compactions and could spuriously trip the
-              // non-vacuous require below). The measured wall is the
-              // maintenance thread's view: staging (no lock) plus any
-              // monitor wait behind an in-flight applyBatch in the
-              // capture/finalize sections — the printed compaction
-              // walls therefore INCLUDE lock-wait; the batch walls are
-              // the stall signal, these are context.
-              val didWork = m.compactLog()
-              val s = (System.nanoTime() - t0) / 1e9
-              if (didWork) cWalls.add(s)
-              Thread.sleep(cadenceMs)
-            }
-          } catch {
-            // a dead maintenance thread would silently degrade the
-            // 'live' leg to a solo measurement — surface it instead
-            case t: Throwable => maintErr = t
-          }
-        }))
-        maint.foreach { t => t.setDaemon(true); t.start() }
-        val walls = Seq.newBuilder[Double]
-        for (b <- 0 until 40) {
-          val lo = seedN + batchSz * b
-          val batch = all.filter(col("vec_id") >= lo && col("vec_id") < lo + batchSz)
-          val t0 = System.nanoTime()
-          m.applyBatch(batch, b.toLong)
-          walls += (System.nanoTime() - t0) / 1e9
-        }
-        stop = true
-        maint.foreach(_.join())
-        require(maintErr == null,
-          s"$legTag $tag: maintenance thread died — the leg " +
-            s"would report a solo run as live: $maintErr")
-        require(m.index.assigned.count() == nVecs,
-          s"$legTag $tag: live compaction lost or duplicated vectors")
-        val w = walls.result().sorted
-        val cs = {
-          import scala.jdk.CollectionConverters._
-          cWalls.asScala.map(_.doubleValue).toSeq.sorted
-        }
-        require(!withMaint || cs.nonEmpty,
-          s"$legTag $tag: no real compaction landed inside the " +
-            "feed — the live row would be vacuous; lengthen the feed or " +
-            "shorten the cadence")
-        println(f"$legTag%s $tag%-5s batch wall p50 ${w(w.size / 2)}%6.2f s" +
-          f"  p90 ${w(w.size * 9 / 10)}%6.2f s  max ${w.last}%6.2f s" +
-          (if (withMaint)
-            f"  | ${cs.size}%2d real compactions, walls " +
-              f"${if (cs.isEmpty) 0.0 else cs.head}%5.2f–${if (cs.isEmpty) 0.0 else cs.last}%5.2f s"
-          else ""))
-      }
-      feed("solo", withMaint = false)
-      feed("live", withMaint = true)
-      spark.stop()
-      return
-    }
-
-    // Replica-fleet pricing at the decade (VERDICT r14 #4): the
-    // IvfReplica laws run at sf0.001; the runbook's cadence-sizing rule
-    // ("owner compaction cadence above replica re-read cadence") had no
-    // measured numbers behind it. This leg runs the COMPACTLIVE-scale
-    // owner (seed + 40 batches, maintenance compactions on a wall-clock
-    // cadence) with FOUR threads searching one SHARED IvfReplica
-    // throughout, and reports: searches/sec, completed heals
-    // (reRestores) vs completed owner compactions, and the search-wall
-    // spread — max − p50 ≈ the heal price (one restore at this corpus
-    // size; cf. RESTORE100X's 1.08 s snapshot restore). Parity: the
-    // post-run search must heal onto the final generation and answer
-    // exactly like a from-scratch index over the full corpus.
-    // SPARK_GRAFT_REPLICA100X=10x runs the small arm for iteration.
-    if (sys.env.contains("SPARK_GRAFT_REPLICA100X")) {
-      import graft.operators.IvfAnn
-      import graft.streaming.Streaming
-      val small = sys.env.get("SPARK_GRAFT_REPLICA100X").contains("10x")
-      val legTag = if (small) "REPLICA10X" else "REPLICA100X"
-      val nVecs = if (small) 60000L else 600000L
-      val seedN = if (small) 20000L else 200000L
-      val batchSz = if (small) 1000L else 10000L
-      val cadenceMs = if (small) 4000L else 8000L
-      val vdir = if (small) "/tmp/graft_replica10x" else "/tmp/graft_replica100x"
-      synthesizeClusteredVecs(spark, vdir, nVecs = nVecs, clusterSize = 16)
-      val all = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val full = IvfAnn.fullCorpus(spark, vdir)
-      val queries = full.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-          col("nrm").as("qn"))
-      val ppath = s"${vdir}_log"
-      val fs = new org.apache.hadoop.fs.Path(ppath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ppath), true)
-      val owner = new Streaming.IvfMaintainer(
-        full.filter(col("vec_id") < seedN), rebuildWhen = _ => false,
-        compactEvery = 16, persistPath = Some(ppath))
-      def batch(b: Int) = {
-        val lo = seedN + batchSz * b
-        all.filter(col("vec_id") >= lo && col("vec_id") < lo + batchSz)
-      }
-      // first generation BEFORE the replica constructs, so the replica
-      // adopts generation files every later compaction retires — the
-      // deployment shape (replicas serve compacted generations, not the
-      // immortal seed)
-      owner.applyBatch(batch(0), 0L)
-      require(owner.compactLog(), s"$legTag: the seeding compaction no-op'd")
-      val replica = new Streaming.IvfReplica(spark, ppath)
-      @volatile var stop = false
-      @volatile var maintErr: Throwable = null
-      @volatile var searchErr: Throwable = null
-      val nCompactions = new java.util.concurrent.atomic.AtomicLong(0)
-      val cWalls = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-      val maint = new Thread(() => {
-        try {
-          while (!stop) {
-            val t0 = System.nanoTime()
-            if (owner.compactLog()) {
-              nCompactions.incrementAndGet()
-              cWalls.add((System.nanoTime() - t0) / 1e9)
-            }
-            Thread.sleep(cadenceMs)
-          }
-        } catch { case t: Throwable => maintErr = t }
-      }, "graft-replica-owner-maint")
-      maint.setDaemon(true); maint.start()
-      val sWalls = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-      val searchers = (1 to 4).map { i =>
-        new Thread(() => {
-          try {
-            while (!stop) {
-              val t0 = System.nanoTime()
-              val n = replica.searchTopK(queries, 5).count()
-              sWalls.add((System.nanoTime() - t0) / 1e9)
-              require(n > 0, "a replica search returned zero rows")
-            }
-          } catch {
-            // "invalidated twice" here means the harness cadence is
-            // mis-sized, which is itself a finding — surface, don't mask
-            case t: Throwable => searchErr = t
-          }
-        }, s"graft-replica-search-$i")
-      }
-      searchers.foreach { t => t.setDaemon(true); t.start() }
-      val t0 = System.nanoTime()
-      for (b <- 1 until 40) owner.applyBatch(batch(b), b.toLong)
-      val feedWall = (System.nanoTime() - t0) / 1e9
-      stop = true
-      maint.join(); searchers.foreach(_.join(240000))
-      require(searchers.forall(!_.isAlive), s"$legTag: a searcher hung")
-      require(maintErr == null, s"$legTag: owner maintenance died: $maintErr")
-      require(searchErr == null, s"$legTag: a searcher died: $searchErr")
-      // final generation at the final head (no-op if the cadence
-      // already landed there), then the parity search — it must serve
-      // the FULL corpus exactly, healing if its adoption was retired
-      owner.compactLog()
-      val want = IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndexWithRadii(full)))._2.collect().toSeq.map(_.toString)
-      val got = replica.searchTopK(queries, 5).collect().toSeq.map(_.toString)
-      require(got == want, s"$legTag: post-run replica answers diverged " +
-        "from the full-corpus exact index")
-      import scala.jdk.CollectionConverters._
-      val sw = sWalls.asScala.map(_.doubleValue).toSeq.sorted
-      val cw = cWalls.asScala.map(_.doubleValue).toSeq.sorted
-      require(sw.nonEmpty && nCompactions.get() >= 2,
-        s"$legTag: too few searches/compactions — the leg is vacuous")
-      println(f"$legTag%s ${sw.size}%d searches in $feedWall%6.1f s feed " +
-        f"(${sw.size / feedWall}%5.2f searches/s, 4 threads) | " +
-        f"search wall p50 ${sw(sw.size / 2)}%5.2f s  p90 ${sw(sw.size * 9 / 10)}%5.2f s" +
-        f"  max ${sw.last}%5.2f s")
-      println(f"$legTag%s ${nCompactions.get()}%d owner compactions " +
-        f"(walls ${cw.head}%5.2f-${cw.last}%5.2f s, cadence ${cadenceMs / 1000.0}%4.1f s sleep) | " +
-        f"${replica.reRestores}%d completed heals " +
-        f"(${replica.reRestores.toDouble / nCompactions.get()}%4.2f heals/compaction)")
-      spark.stop()
-      return
-    }
-
-    // IvfMaintainer restore at scale (VERDICT r11 #4): the r11 restore
-    // law runs on a toy log; this leg builds delta logs at the MAINT10X
-    // corpus size (20k seed + 40k appended) and times restore().
-    // restore() is claimed ONE bulk append, never O(batches) — so the
-    // same 40k delta vectors are logged twice, as 50×800 and as
-    // 10×4000: the two restore walls must be comparable (data-bound,
-    // not batch-count-bound), and each restored index must answer
-    // searches exactly like a from-scratch rebuild over the full 60k.
-    if (sys.env.contains("SPARK_GRAFT_RESTORE10X")) {
-      import graft.operators.IvfAnn
-      import graft.streaming.Streaming
-      // SPARK_GRAFT_RESTORE10X=100x pins the same claim one decade up
-      // (VERDICT r12 #3): 200k seed + 400k appended = 600k vectors,
-      // one leg (both restore paths — delta-log and compacted). Expect
-      // wall ∝ corpus, never ∝ batches.
-      val at100 = sys.env.get("SPARK_GRAFT_RESTORE10X").contains("100x")
-      val tag = if (at100) "RESTORE100X" else "RESTORE10X"
-      val nVecs = if (at100) 600000L else 60000L
-      val seedN = if (at100) 200000L else 20000L
-      val legs = if (at100) Seq((40, 10000L)) else Seq((50, 800L), (10, 4000L))
-      val vdir = if (at100) "/tmp/graft_restore100x" else "/tmp/graft_restore10x"
-      synthesizeClusteredVecs(spark, vdir, nVecs = nVecs, clusterSize = 16)
-      val all = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val full = IvfAnn.fullCorpus(spark, vdir)
-      val queries = full.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-          col("nrm").as("qn"))
-      def answers(corpus: org.apache.spark.sql.DataFrame,
-          idx: IvfAnn.IvfIndex): Seq[String] =
-        IvfAnn.boundedTopK(corpus, queries, 5, Some(idx))._2
-          .collect().toSeq.map(_.toString)
-      val want = answers(full, IvfAnn.buildIndexWithRadii(full))
-      for ((nb, bsz) <- legs) {
-        val ppath = s"${vdir}_log_$nb"
-        val fs = new org.apache.hadoop.fs.Path(ppath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(ppath), true)
-        val m = new Streaming.IvfMaintainer(
-          full.filter(col("vec_id") < seedN),
-          rebuildWhen = _ => false, compactEvery = 16,
-          persistPath = Some(ppath))
-        val tFeed = time {
-          for (b <- 0 until nb) {
-            val lo = seedN + bsz * b
-            m.applyBatch(
-              all.filter(col("vec_id") >= lo && col("vec_id") < lo + bsz),
-              b.toLong)
-          }
-        }
-        var m2: Streaming.IvfMaintainer = null
-        val tRestore = time {
-          m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
-          // force the restored index end-to-end (the count is the
-          // bulk-append's materializing action)
-          require(m2.index.assigned.count() == nVecs,
-            "restored index lost or duplicated members")
-        }
-        require(answers(m2.corpus, m2.index) == want,
-          s"$tag: restored index answers != from-scratch rebuild ($nb-batch log)")
-        println(f"$tag%s log $nb%3d batches × $bsz%5d vectors:" +
-          f" feed $tFeed%7.2f s  restore $tRestore%7.2f s  (search parity OK)")
-        // compacted-log restore (round 12): collapse the delta log into
-        // one snapshot and re-time — the deployment-cadence operation
-        // the maintainer scaladoc promises
-        val tCompact = time(m.compactLog())
-        var m3: Streaming.IvfMaintainer = null
-        val tRestoreC = time {
-          m3 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
-          require(m3.index.assigned.count() == nVecs,
-            "compacted-log restore lost or duplicated members")
-        }
-        require(answers(m3.corpus, m3.index) == want,
-          s"$tag: compacted-log restore answers != rebuild ($nb-batch log)")
-        println(f"$tag%s log $nb%3d batches × $bsz%5d vectors:" +
-          f" feed $tFeed%7.2f s  compactLog $tCompact%7.2f s  restore-after-compact $tRestoreC%7.2f s" +
-          "  (search parity OK)")
-      }
-      spark.stop()
-      return
-    }
-
-    // Head-record economics at the deep-tail extreme (VERDICT r16 #4):
-    // the record is O(tail) bytes per batch and anchor-less discovery
-    // gallops O(newest) GETs — both were argued, neither measured.
-    // Three measurements:
-    //  (1) the RESTORE10X 10×4000 shape end-to-end: feed wall (records
-    //      ON — the only protocol), restore wall through the records,
-    //      then the SAME log with head/ deleted — the legacy LIST-walk
-    //      restore — as the with/without-records comparison;
-    //  (2) record SIZE at never-compacting tails (10 → 4000 ids): one
-    //      real writeHeadRecord each, file length read back;
-    //  (3) discovery cost over a 4000-record head dir — the real
-    //      writer fabricates the metadata layer (data-plane batches
-    //      don't affect record economics, and 4000 real batches would
-    //      measure Spark job overhead, not the records): gallop from
-    //      seq 1 (no anchor — retention/compaction never ran) vs from
-    //      an anchor at the newest (the cadence-maintained case), plus
-    //      the per-record PUT wall for all 4000.
-    if (sys.env.contains("SPARK_GRAFT_HEADTAIL")) {
-      import graft.operators.IvfAnn
-      import graft.streaming.Streaming
-      val vdir = "/tmp/graft_headtail"
-      synthesizeClusteredVecs(spark, vdir, nVecs = 60000L, clusterSize = 16)
-      val all = spark.read.parquet(s"$vdir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val full = IvfAnn.fullCorpus(spark, vdir)
-      // ---- (1) the 10×4000 shape, records vs legacy walk ------------
-      val ppath = s"${vdir}_log"
-      val fs = new org.apache.hadoop.fs.Path(ppath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ppath), true)
-      val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < 20000L),
-        rebuildWhen = _ => false, compactEvery = 1000,
-        persistPath = Some(ppath))
-      val tFeed = time {
-        for (b <- 0 until 10)
-          m.applyBatch(all.filter(col("vec_id") >= 20000L + 4000L * b &&
-            col("vec_id") < 20000L + 4000L * (b + 1)), b.toLong)
-      }
-      def restoreWall(): Double = time {
-        val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
-        require(r.index.assigned.count() == 60000L,
-          "HEADTAIL restore lost or duplicated members")
-      }
-      val tRec = restoreWall()
-      fs.delete(new org.apache.hadoop.fs.Path(s"$ppath/head"), true)
-      val tLegacy = restoreWall()
-      println(f"HEADTAIL 10×4000: feed $tFeed%6.2f s  " +
-        f"restore-records $tRec%6.2f s  restore-legacy-walk $tLegacy%6.2f s")
-      // ---- (2) record size vs tail depth ----------------------------
-      val sdir = s"${vdir}_sizes"
-      fs.delete(new org.apache.hadoop.fs.Path(sdir), true)
-      for (depth <- Seq(10, 100, 400, 1000, 4000)) {
-        Streaming.writeHeadRecord(spark, sdir, depth.toLong, -1L,
-          0L until depth.toLong)
-        val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-          s"$sdir/head/$depth")).getLen
-        println(f"HEADTAIL record size: tail $depth%5d ids -> $len%7d bytes")
-      }
-      // ---- (3) discovery over a 4000-record head dir ----------------
-      val gdir = s"${vdir}_gallop"
-      fs.delete(new org.apache.hadoop.fs.Path(gdir), true)
-      val tPuts = time {
-        for (n <- 1 to 4000)
-          Streaming.writeHeadRecord(spark, gdir, n.toLong, -1L,
-            0L until n.toLong)
-      }
-      val tGallop = time {
-        require(Streaming.discoverFrontier(spark, gdir)
-          .exists(_._1 == 4000L), "gallop discovery missed the newest record")
-      }
-      Streaming.writeHeadAnchor(spark, gdir, 4000L)
-      val tAnchored = time {
-        require(Streaming.discoverFrontier(spark, gdir)
-          .exists(_._1 == 4000L), "anchored discovery missed the newest record")
-      }
-      println(f"HEADTAIL 4000-record head: PUTs total $tPuts%6.2f s " +
-        f"(${tPuts / 4000 * 1000}%6.2f ms/record avg)  " +
-        f"gallop-from-1 $tGallop%6.3f s  anchored $tAnchored%6.3f s")
-      spark.stop()
-      return
-    }
-
-    // Composed end-to-end curation pipeline at 10× (VERDICT r11 #3):
-    // the production chain — exact dedup → near-dup keeper (pair graph
-    // + CC) → decontamination → quality gates → mixture plan → shard
-    // layout — as ONE application over one warm derivation set
-    // (PipelineOps.curationRun), measured against the sum of the same
-    // stages' ISOLATED steady states (each stage evicts every shared
-    // derivation first — the fresh-session cost model, so the sum is
-    // what six separate driver jobs would pay). Parity: the composed
-    // mixture/shard tables must equal the DECLARED q289/q285 run over
-    // the materialized survivor corpus — same semantics through a
-    // different code path (parquet round-trip vs in-memory chain).
-    // Durable-frontier restart pricing (VERDICT r14 #1, the measured
-    // leg behind the feature): the runDir laws prove resume semantics
-    // at sf0.001; this leg prices them at the PIPE10X corpus. Four
-    // timed runs, each from a fully-evicted derivation cache (the
-    // PIPE10X cold convention — resume must not look cheap merely
-    // because an earlier run warmed the pair graph):
-    //   mem     — the in-memory composed run (the PIPE10X protocol);
-    //   durable — the same run with runDir: the durability tax is the
-    //             five frontier writes;
-    //   crash   — a run that dies entering stage 4 (quality), stages
-    //             1-3 durable: what a real death at the gate stage
-    //             costs;
-    //   resume  — re-invocation over the crashed log: pays stages 4-5
-    //             + plans only; dedup, CC and decontamination are READ.
-    // Asserts the resumed outputs equal the uninterrupted durable
-    // run's, and that resume computed exactly stages 4-5.
-    if (sys.env.contains("SPARK_GRAFT_PIPERESUME")) {
-      import graft.operators.PipelineOps
-      // SPARK_GRAFT_PIPERESUME=100x runs the identical protocol on the
-      // PIPE100X corpus (VERDICT r15 #6): the design argument says the
-      // resume RATIO falls with scale — the durability tax is five slim
-      // id-frame writes (∝ corpus rows once) while the resume saving is
-      // the upstream pair-graph + CC + decontamination walls (the
-      // super-linear part) — and a ratio argument needs both decades
-      // measured, not extrapolated.
-      val at100 = sys.env.get("SPARK_GRAFT_PIPERESUME").contains("100x")
-      val tag = if (at100) "PIPERESUME100X" else "PIPERESUME10X"
-      val d10 = if (at100) "/tmp/graft_piperesume100x"
-        else "/tmp/graft_piperesume10x"
-      synthesizeTemplated(spark, d10,
-        nDocs = if (at100) 500000L else 50000L,
-        vocabSize = if (at100) 50000 else 5000)
-      val fsRoot = new org.apache.hadoop.fs.Path("/tmp")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def freshDir(name: String): String = {
-        val p = s"/tmp/${name}"
-        fsRoot.delete(new org.apache.hadoop.fs.Path(p), true)
-        p
-      }
-      def cold(): Unit = {
-        graft.plans.DerivationCache.evictAll()
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      // materialize what a real run ships: funnel counts + both plans
-      def ship(r: PipelineOps.CurationRun): Seq[(String, Long)] = {
-        val funnel = r.stages.map { case (nm, df) => (nm, df.count()) }
-        noop(r.mixture); noop(r.shards)
-        funnel
-      }
-      def outputs(r: PipelineOps.CurationRun): (Long, Seq[String], Seq[String]) = (
-        r.survivors.count(),
-        r.mixture.collect().toSeq.map(_.toString),
-        r.shards.collect().toSeq.map(_.toString))
-      // untimed warm-up pass: the first composed run of a session pays
-      // JIT + whole-stage-codegen compilation the derivation eviction
-      // cannot (and should not) reset — without it the first TIMED run
-      // eats that one-time cost and the comparison lies (first capture
-      // of this leg showed a NEGATIVE durability tax for exactly that
-      // reason)
-      ship(PipelineOps.curationRun(spark, d10))
-      cold()
-      val t0m = System.nanoTime()
-      val rMem = PipelineOps.curationRun(spark, d10)
-      ship(rMem)
-      val memWall = (System.nanoTime() - t0m) / 1e9
-      val dirA = freshDir(s"graft_piperesume_a_$tag")
-      cold()
-      val t0d = System.nanoTime()
-      val rDur = PipelineOps.curationRun(spark, d10, Some(dirA))
-      ship(rDur)
-      val durableWall = (System.nanoTime() - t0d) / 1e9
-      val wantOut = outputs(rDur)
-      // crash entering stage 4 — stages 1-3 are durable when it dies
-      val dirB = freshDir(s"graft_piperesume_b_$tag")
-      cold()
-      val t0x = System.nanoTime()
-      // a DEDICATED exception type (ADVICE r15): catching any
-      // RuntimeException would misclassify a genuine stage-1-3 failure
-      // as the injected death and let it surface later as a confusing
-      // resume-leg assertion — anything else propagates
-      final class InjectedDriverDeath
-        extends RuntimeException("injected driver death")
-      val crashed =
-        try { PipelineOps.stageProbe = n =>
-            if (n == 4) throw new InjectedDriverDeath
-          PipelineOps.curationRun(spark, d10, Some(dirB)); false
-        } catch { case _: InjectedDriverDeath => true }
-        finally PipelineOps.stageProbe = _ => ()
-      val crashWall = (System.nanoTime() - t0x) / 1e9
-      require(crashed, s"$tag: the crash leg never crashed — vacuous")
-      // the runbook step before any resume (r16 single-writer lock):
-      // the dead writer's run.lock is orphaned and fails closed
-      locally {
-        val lp = new org.apache.hadoop.fs.Path(s"$dirB/run.lock")
-        lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(lp, false)
-      }
-      // resume over the crashed log, cold cache: stages 1-3 must be
-      // read, stages 4-5 computed, outputs identical to the
-      // uninterrupted durable run
-      val computed = scala.collection.mutable.ArrayBuffer[Int]()
-      cold()
-      val t0r = System.nanoTime()
-      val rRes =
-        try { PipelineOps.stageProbe = n => { computed += n; () }
-          PipelineOps.curationRun(spark, d10, Some(dirB))
-        } finally PipelineOps.stageProbe = _ => ()
-      val resumeFunnel = ship(rRes)
-      val resumeWall = (System.nanoTime() - t0r) / 1e9
-      require(computed.toSeq == Seq(4, 5),
-        s"$tag: resume computed $computed, expected exactly stages 4-5")
-      require(outputs(rRes) == wantOut,
-        s"$tag: resumed outputs diverged from the uninterrupted run")
-      resumeFunnel.foreach { case (nm, n) =>
-        println(f"$tag funnel $nm%-16s $n%8d docs")
-      }
-      println(f"$tag in-memory composed $memWall%6.2f s | durable (runDir)" +
-        f" $durableWall%6.2f s (durability tax ${durableWall - memWall}%+5.2f s)" +
-        f" | crash-at-stage-4 run $crashWall%6.2f s")
-      println(f"$tag resume $resumeWall%6.2f s = ${100 * resumeWall / durableWall}%4.1f%%" +
-        f" of the full durable run — the restart re-pays stages 4-5 + plans" +
-        f" only (dedup/CC/decontamination read back)")
-      spark.stop()
-      return
-    }
-
-    // Durability-tax bound at a memory-stable corpus (VERDICT r16 #3):
-    // the 100× (500k-doc) composed run is memory/GC-bound on this
-    // container — one-rep mem-vs-durable differences swung ±2× across
-    // reps (SCALE.md r16), so the tax number did not replicate there.
-    // This leg runs the tax protocol median-of-3 at 250k docs — big
-    // enough that the five frontier writes are priced against real
-    // stage walls, small enough that reps are GC-stable — with
-    // PAIRED, alternating reps (each mem rep immediately followed by
-    // its durable rep, so container drift hits both sides of a pair).
-    if (sys.env.contains("SPARK_GRAFT_PIPETAX")) {
-      import graft.operators.PipelineOps
-      val d10 = "/tmp/graft_pipetax250k"
-      synthesizeTemplated(spark, d10, nDocs = 250000L, vocabSize = 25000)
-      val fsRoot = new org.apache.hadoop.fs.Path("/tmp")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def cold(): Unit = {
-        graft.plans.DerivationCache.evictAll()
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      }
-      def ship(r: PipelineOps.CurationRun): Unit = {
-        r.stages.foreach { case (_, df) => df.count() }
-        noop(r.mixture); noop(r.shards)
-      }
-      // untimed JIT/codegen warm-up (the PIPERESUME convention — the
-      // first composed run of a session is not a measurement)
-      ship(PipelineOps.curationRun(spark, d10))
-      val reps = for (i <- 1 to 3) yield {
-        cold()
-        val t0m = System.nanoTime()
-        ship(PipelineOps.curationRun(spark, d10))
-        val mem = (System.nanoTime() - t0m) / 1e9
-        val rd = s"/tmp/graft_pipetax_run$i"
-        fsRoot.delete(new org.apache.hadoop.fs.Path(rd), true)
-        cold()
-        val t0d = System.nanoTime()
-        ship(PipelineOps.curationRun(spark, d10, Some(rd)))
-        val dur = (System.nanoTime() - t0d) / 1e9
-        println(f"PIPETAX250K rep$i: mem $mem%6.2f s  durable $dur%6.2f s" +
-          f"  tax ${dur - mem}%+6.2f s")
-        (mem, dur)
-      }
-      def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-      val mMem = median(reps.map(_._1))
-      val mDur = median(reps.map(_._2))
-      val taxes = reps.map(r => r._2 - r._1)
-      println(f"PIPETAX250K median: mem $mMem%6.2f s  durable $mDur%6.2f s" +
-        f"  tax ${mDur - mMem}%+6.2f s (${100 * (mDur - mMem) / mMem}%+5.1f%%)" +
-        f"  per-rep taxes ${taxes.map(t => f"$t%+5.2f").mkString(" / ")}")
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_PIPE10X")) {
-      import graft.operators.PipelineOps
-      // SPARK_GRAFT_PIPE10X=100x runs the same protocol on the ROI100X
-      // 500k-doc corpus (vocab scales with it — the Heaps convention)
-      val at100 = sys.env.get("SPARK_GRAFT_PIPE10X").contains("100x")
-      val tag = if (at100) "PIPE100X" else "PIPE10X"
-      val d10 = if (at100) "/tmp/graft_pipe100x" else "/tmp/graft_pipe10x"
-      synthesizeTemplated(spark, d10,
-        nDocs = if (at100) 500000L else 50000L,
-        vocabSize = if (at100) 50000 else 5000)
-      val stages = Seq("q42_dedup_exact_survivors", "q70_dedup_clusters",
-        "q221_dedup_best_keeper", "q73_decontaminate", "q90_quality_gate",
-        "q289_temperature_mixture", "q285_shard_planner")
-      // isolated cost of each stage, two numbers: COLD (rep 1 after
-      // full derivation eviction — what this stage costs as its own
-      // driver job, shared builds included; the sum is what six
-      // separate jobs pay) and warm STEADY (min of 2 further reps —
-      // the lower bound where every derivation is already built).
-      def coldAndSteady(name: String): (Double, Double) = {
-        graft.plans.DerivationCache.evictAll()
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-        val cold = run(name, d10) // rebuilds the evicted derivations
-        val t = math.min(run(name, d10), run(name, d10))
-        graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-        (cold, t)
-      }
-      var sumCold = 0.0
-      var sumSteady = 0.0
-      for (name <- stages) {
-        val (c, t) = coldAndSteady(name)
-        sumCold += c
-        sumSteady += t
-        println(f"$tag isolated $name%-28s cold $c%7.2f s  steady $t%7.2f s")
-      }
-      // composed: ONE cold application, materializing what a real run
-      // ships — the funnel attrition counts and both plan tables
-      graft.plans.DerivationCache.evictAll()
-      graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-      val t0c = System.nanoTime()
-      val r = PipelineOps.curationRun(spark, d10)
-      val funnel = r.stages.map { case (nm, df) => (nm, df.count()) }
-      noop(r.mixture)
-      noop(r.shards)
-      val composed = (System.nanoTime() - t0c) / 1e9
-      funnel.foreach { case (nm, n) =>
-        println(f"$tag funnel $nm%-16s $n%8d docs")
-      }
-      println(f"$tag composed $composed%7.2f s vs sum-of-isolated-cold" +
-        f" $sumCold%7.2f s (${sumCold / composed}%4.2f× amortization;" +
-        f" warm-steady floor $sumSteady%6.2f s)")
-      // parity through the parquet round-trip
-      val sdir = s"${d10}_surv"
-      graft.Tables.documents(spark, d10)
-        .join(r.survivors.select("doc_id"), "doc_id")
-        .write.mode("overwrite").parquet(s"$sdir/documents.parquet")
-      val mixWant = graft.SparkEntry.queries("q289_temperature_mixture")(
-        spark, sdir).collect().toSeq.map(_.toString)
-      require(r.mixture.collect().toSeq.map(_.toString) == mixWant,
-        s"$tag: composed mixture plan != declared q289 over the survivor corpus")
-      val shWant = graft.SparkEntry.queries("q285_shard_planner")(
-        spark, sdir).collect().toSeq.map(_.toString)
-      require(r.shards.collect().toSeq.map(_.toString) == shWant,
-        s"$tag: composed shard plan != declared q285 over the survivor corpus")
-      println(s"$tag parity: mixture + shard tables == declared queries over the survivor corpus")
-      spark.stop()
-      return
-    }
-
-    // ROI/class-separation/context-fit at 100× (r9 verdict #4): the
-    // three round-9 ops whose 10× audit smokes (1.8×/1.6×/1.6×) were
-    // overhead-dominated. q267/q270 are document-token-volume-bound →
-    // templated 50k/500k legs; q268 is embedding-volume-bound → the
-    // clustered 20k/200k vector legs. Warm-both-scales, steady = min
-    // of 2 warm reps (the DEDUP100X protocol).
-    if (sys.env.contains("SPARK_GRAFT_ROI100X")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      val v10 = "/tmp/graft_ivf10x"
-      val v100 = "/tmp/graft_ivf100x"
-      synthesizeClusteredVecs(spark, v10, nVecs = 20000L, clusterSize = 16)
-      synthesizeClusteredVecs(spark, v100, nVecs = 200000L, clusterSize = 16)
-      for ((name, dir10, dir100) <- Seq(
-          ("q267_dedup_token_savings", d10, d100),
-          ("q270_context_fit", d10, d100),
-          ("q268_class_separation", v10, v100),
-          // r10: label purity shares q222b's NN machinery — certify it
-          // on the clustered corpus (the regime where 1-NN means
-          // anything; the near-orthogonal audit leg measured 1.14
-          // per-unit at 5× as the worst case)
-          ("q283_knn_label_purity", v10, v100),
-          // r10 second batch: the token-volume ops whose 10× audit
-          // smokes (1.6/1.8/1.5) were overhead-dominated
-          ("q287_yield_funnel", d10, d100),
-          ("q288_length_diversity_rankcorr", d10, d100),
-          ("q291_kn_continuation", d10, d100))) {
-        val c10 = run(name, dir10) // warm
-        val t10 = math.min(run(name, dir10), run(name, dir10))
-        val c100 = run(name, dir100) // warm
-        val t100 = math.min(run(name, dir100), run(name, dir100))
-        println(f"ROI100X $name%-26s 10x $t10%8.2f  100x $t100%9.2f" +
-          f"  per-unit ${(t100 / t10) / 10.0}%5.2f" +
-          f"  [cold 10x $c10%8.2f 100x $c100%9.2f]")
-      }
-      spark.stop()
-      return
-    }
-
-    // Science-ops-at-100× mode (r8 verdict #6): q244 winnowing and
-    // q246 label propagation are the two round-8 ops whose cost is
-    // corpus-token-volume-bound and whose 10× smoke ratios (3.5× /
-    // 3.2×) were too overhead-dominated to certify per-unit
-    // sub-linearity — the 50k→500k leg under the DEDUP100X
-    // warm-both-scales protocol measures it directly. Expect per-unit
-    // (t100/t10)/10 ≈ 1: winnowing is one pass over token windows +
-    // an overlap join bounded by fingerprint collisions (vocab scales
-    // with the corpus, so collision df stays flat); LPA is two
-    // unrolled argmax rounds over the near-dup edge table, which grows
-    // linearly on the templated corpus.
-    if (sys.env.contains("SPARK_GRAFT_SCIENCE100X")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      // q246's corpus is the lineitem⋈orders bipartite graph, not
-      // documents: synthesize the two join columns the edge build
-      // reads, at 10×/100× of the sf0.1 fact sizes (0.6M/6M/60M
-      // lineitem; keys scale with the fact so edge density stays
-      // realistic rather than collapsing onto few hub nodes).
-      def synthGraph(dir: String, nLi: Long, nOrd: Long, nCust: Long,
-          nSupp: Long): Unit = {
-        spark.range(nLi).select(
-            pmod(xxhash64(col("id")), lit(nOrd)).as("l_orderkey"),
-            pmod(xxhash64(col("id") + 5), lit(nSupp)).as("l_suppkey"))
-          .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-        spark.range(nOrd).select(col("id").as("o_orderkey"),
-            pmod(xxhash64(col("id") + 7), lit(nCust)).as("o_custkey"))
-          .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      }
-      synthGraph(d10, 6000000L, 1500000L, 150000L, 10000L)
-      synthGraph(d100, 60000000L, 15000000L, 1500000L, 100000L)
-      Seq("q244_winnowing_overlap", "q246_label_propagation").foreach { name =>
-        val c10 = run(name, d10) // warm (cold shared-derivation build)
-        val t10 = math.min(run(name, d10), run(name, d10))
-        val c100 = run(name, d100)
-        val t100 = math.min(run(name, d100), run(name, d100))
-        println(f"SCIENCE100X $name%-24s 10x(50k) $t10%8.2f  100x(500k) $t100%9.2f" +
-          f"  per-unit ${(t100 / t10) / 10.0}%5.2f" +
-          f"  [cold 10x $c10%8.2f 100x $c100%9.2f]")
-      }
-      spark.stop()
-      return
-    }
-
-    // Dedup-at-100× mode (r6 verdict #6): the production dedup path
-    // (q44 LSH banding, q137 incremental exact, q82 full pipeline) on a
-    // TEMPLATED corpus at 50k (10×) vs 500k (100×) docs. Template
-    // structure makes the measurement honest at scale: every 10 docs
-    // share a template (9 mutated near-dup siblings + 1 canonical), so
-    // LSH buckets and the t=0.3 pair graph carry real, linearly-growing
-    // near-dup volume instead of the zero-dup (trivially fast) or
-    // tiny-vocab (artificially quadratic) regimes; the vocabulary
-    // scales with corpus size (Heaps' law) so shingle df stays
-    // realistic. Expect per-unit ratio (t100/t10)/10 ≈ 1 for all three.
-    if (sys.env.contains("SPARK_GRAFT_DEDUP100X")) {
-      val d10 = "/tmp/graft_dedup10x"
-      val d100 = "/tmp/graft_dedup100x"
-      synthesizeTemplated(spark, d10, nDocs = 50000L, vocabSize = 5000)
-      synthesizeTemplated(spark, d100, nDocs = 500000L, vocabSize = 50000)
-      // Protocol note (fixed in round 8): BOTH scales get a warm rep
-      // before timing. The round-7 run warmed only 10× — q82's warm
-      // rep populated the memoized pair-graph checkpoint there, so the
-      // 10× timings measured CC+collapse over cached stats while the
-      // single 100× rep paid the full cold pair-graph build; the
-      // "2.11 per-unit" was that asymmetry, not superlinear scaling.
-      // Cold (first-rep) times are printed too: that is the
-      // once-per-corpus-snapshot derivation cost.
-      Seq("q44_minhash_lsh", "q137_incremental_dedup", "q82_dedup_pipeline")
-        .foreach { name =>
-          val c10 = run(name, d10) // warm (cold build at 10×)
-          val t10 = math.min(run(name, d10), run(name, d10))
-          val c100 = run(name, d100) // warm (cold build at 100×)
-          val t100 = run(name, d100)
-          println(f"DEDUP100X $name%-24s 10x(50k) $t10%8.2f  100x(500k) $t100%9.2f" +
-            f"  per-unit ${(t100 / t10) / 10.0}%5.2f" +
-            f"  [cold 10x $c10%8.2f 100x $c100%9.2f per-unit ${(c100 / c10) / 10.0}%5.2f]")
-        }
-      spark.stop()
-      return
-    }
-
-    // Audit-only mode: the audit/profiling family (q116–q118, q125,
-    // q126) at 1× (real sf0.1) vs a 10× synthetic star schema with the
-    // same shapes (6M lineitem, 1.5M orders, 1M events, 50k documents).
-    // The round-5 shared-scan plans (checkpointed fact-key projections,
-    // union-of-single-distinct profiling, MG+recount) are all expected
-    // near-linear; this measures it. Cold = first run at the dir
-    // (includes the staging scan + checkpoint build); steady = min of 2
-    // reruns (staging amortized across the audit suite, the production
-    // shape where the staging table is written once per snapshot).
-    if (sys.env.contains("SPARK_GRAFT_AUDIT_ONLY")) {
-      val adir = "/tmp/graft_audit10x"
-      synthesize(spark, adir, nDocs = 50000L, nVecs = 10000L) // 10x docs, 5x vecs
-      val epoch = lit(1704067200L) // 2024-01-01T00:00:00Z
-      spark.range(1000000L)
-        .select(col("id").as("event_id"),
-          timestamp_micros((epoch + pmod(xxhash64(col("id")), lit(30L * 86400))) * 1000000L)
-            .cast("timestamp_ntz").as("ts"),
-          pmod(xxhash64(col("id") + 9), lit(20000L)).as("user_id"),
-          element_at(array(lit("view"), lit("click"), lit("purchase")),
-            (pmod(xxhash64(col("id") + 4), lit(3)) + 1).cast("int")).as("event_type"),
-          (pmod(xxhash64(col("id") + 2), lit(10000L)).cast("double") / 100.0).as("value"),
-          lit("{}").as("props"))
-        .write.mode("overwrite").parquet(s"$adir/events.parquet")
-      spark.range(6000000L)
-        .select(pmod(xxhash64(col("id")), lit(1500000L)).as("l_orderkey"),
-          pmod(xxhash64(col("id") + 3), lit(200000L)).as("l_partkey"),
-          pmod(xxhash64(col("id") + 5), lit(10000L)).as("l_suppkey"),
-          (pmod(xxhash64(col("id") + 17), lit(10000000L)).cast("double") / 100.0)
-            .as("l_extendedprice"),
-          // spans [-30, 395) days from the epoch so q189 sees negative lags
-          date_add(lit(java.sql.Date.valueOf("2024-01-01")),
-            (pmod(xxhash64(col("id") + 19), lit(425L)) - 30L).cast("int"))
-            .as("l_shipdate"),
-          element_at(array(lit("A"), lit("N"), lit("R")),
-            (pmod(col("id"), lit(3)) + 1).cast("int")).as("l_returnflag"),
-          (pmod(xxhash64(col("id") + 29), lit(11L)).cast("double") / 100.0)
-            .as("l_discount"),
-          (pmod(xxhash64(col("id") + 31), lit(50L)) + 1).cast("double")
-            .as("l_quantity"),
-          (pmod(xxhash64(col("id") + 47), lit(7L)) + 1).as("l_linenumber"))
-        .write.mode("overwrite").parquet(s"$adir/lineitem.parquet")
-      spark.range(1500000L)
-        .select(col("id").as("o_orderkey"),
-          pmod(xxhash64(col("id") + 7), lit(150000L)).as("o_custkey"),
-          element_at(array(lit("O"), lit("F"), lit("P")),
-            (pmod(xxhash64(col("id") + 11), lit(3)) + 1).cast("int")).as("o_orderstatus"),
-          (pmod(xxhash64(col("id") + 13), lit(50000000L)).cast("double") / 100.0)
-            .as("o_totalprice"),
-          date_add(lit(java.sql.Date.valueOf("2024-01-01")),
-            pmod(col("id"), lit(365)).cast("int")).as("o_orderdate"),
-          concat(lit("P"), pmod(col("id"), lit(5))).as("o_orderpriority"))
-        .write.mode("overwrite").parquet(s"$adir/orders.parquet")
-      spark.range(150000L).select(col("id").as("c_custkey"),
-          pmod(col("id"), lit(25)).as("c_nationkey"),
-          // spans negatives so the positive-average filter is exercised
-          ((pmod(xxhash64(col("id") + 23), lit(1100000L)).cast("double") - 100000.0) / 100.0)
-            .as("c_acctbal"),
-          element_at(array(lit("AUTOMOBILE"), lit("BUILDING"), lit("FURNITURE"),
-            lit("HOUSEHOLD"), lit("MACHINERY")),
-            (pmod(col("id"), lit(5)) + 1).cast("int")).as("c_mktsegment"),
-          format_string("CUST%06d", col("id")).as("c_name"))
-        .write.mode("overwrite").parquet(s"$adir/customer.parquet")
-      spark.range(10000L).select(col("id").as("s_suppkey"),
-          pmod(col("id"), lit(25)).as("s_nationkey"),
-          format_string("SUPP%05d", col("id")).as("s_name"),
-          ((pmod(xxhash64(col("id") + 37), lit(1100000L)).cast("double") - 100000.0) / 100.0)
-            .as("s_acctbal"))
-        .write.mode("overwrite").parquet(s"$adir/supplier.parquet")
-      spark.range(200000L).select(col("id").as("p_partkey"),
-          element_at(array(lit("PROMO"), lit("STANDARD"), lit("ECONOMY"),
-            lit("MEDIUM"), lit("LARGE"), lit("SMALL")),
-            (pmod(col("id"), lit(6)) + 1).cast("int")).as("p_type"),
-          format_string("Brand#%02d", pmod(col("id"), lit(25)))
-            .as("p_brand"),
-          (pmod(col("id"), lit(50)) + 1).cast("int").as("p_size"),
-          (pmod(xxhash64(col("id") + 41), lit(100000L)).cast("double") / 100.0)
-            .as("p_retailprice"))
-        .write.mode("overwrite").parquet(s"$adir/part.parquet")
-      spark.range(25L).select(col("id").as("n_nationkey"),
-          pmod(col("id"), lit(5)).as("n_regionkey"),
-          format_string("NATION%02d", col("id")).as("n_name"))
-        .write.mode("overwrite").parquet(s"$adir/nation.parquet")
-      spark.range(5L).select(col("id").as("r_regionkey"),
-          format_string("REGION%d", col("id")).as("r_name"))
-        .write.mode("overwrite").parquet(s"$adir/region.parquet")
-
-      val auditOps = Seq("q116_heavy_hitters", "q117_fk_audit",
-        "q118_column_profile", "q125_skew_report", "q126_rolling_mau_approx",
-        // round-6 additions (documents/events-based)
-        "q121_rolling_mau", "q131_sessionization", "q132_tfidf_topk",
-        "q133_attribution", "q134_cms_freq", "q135_priority_sample",
-        "q136_token_budget",
-        // round-6 second batch (star-schema + documents audit/stats/IR)
-        "q138_join_size_estimate", "q139_gini_concentration",
-        "q140_snapshot_diff", "q141_mad_outliers", "q142_posting_lists",
-        "q143_equidepth_hist",
-        // round-6 third batch (orders/events analytics + retrieval)
-        "q144_k_anonymity", "q145_quantile_transform",
-        "q146_rate_limit_audit", "q147_ewma", "q148_benford_audit",
-        "q149_nation_trend", "q150_ab_lift", "q151_rrf_hybrid",
-        // round-6 fourth batch (streaks/rules/freshness/stat screens)
-        "q152_activity_streaks", "q153_basket_rules",
-        "q154_freshness_audit", "q155_lexical_richness",
-        "q156_l_diversity", "q157_chi_square", "q158_bloom_probe",
-        "q159_percentile_bands", "q160_latency_histogram",
-        // round-6 fifth batch (trend/quality/graph)
-        "q161_wow_growth", "q162_time_to_convert", "q163_json_quality",
-        "q164_degree_stats", "q165_winsorized_stats", "q166_cohort_ltv",
-        // round-6 sixth batch (drift/latency)
-        "q167_distribution_drift", "q168_weekly_latency_bands",
-        // round-6 seventh batch (drift/engagement/novelty)
-        "q169_ks_drift", "q170_acf", "q171_stickiness",
-        "q172_category_drift", "q173_fanout_profile",
-        "q174_ngram_novelty", "q175_power_user_deciles",
-        // round-6 eighth batch (seasonality/RFM/drift/funnel)
-        "q176_dow_profile", "q177_rfm_segments", "q178_dup_cluster_profile",
-        "q179_source_length_drift", "q180_region_share",
-        "q181_embedding_drift", "q182_conversion_funnel_7d",
-        // round-6 ninth batch (reach/gini/dedup-impact/alloc/growth/aging)
-        "q183_cumulative_reach", "q184_label_gini", "q185_dedup_impact",
-        "q186_mixture_alloc", "q187_growth_accounting", "q188_order_aging",
-        // round-6 tenth batch (warehouse readouts + norm profile)
-        "q189_ship_lag", "q190_custdist", "q191_promo_share",
-        "q192_abc_class", "q193_embedding_norms", "q194_repeat_buyers",
-        // round-6 eleventh batch (join-tree / argmax / anti-join classics)
-        "q195_local_supplier_volume", "q196_top_supplier",
-        "q197_dormant_capital", "q198_session_depth", "q199_modal_priority",
-        // round-6 twelfth batch (trend/concentration/cadence)
-        "q200_rolling_median", "q201_max_drawdown",
-        "q202_top_customer_share", "q203_order_gap_buckets",
-        "q204_discount_profile",
-        // round-6 thirteenth batch (sweep-line / reconciliation / coverage)
-        "q205_concurrency_peak", "q206_amount_reconciliation",
-        "q207_embedding_coverage",
-        // round-7 batch (adaptive jaccard, brand economics, migration,
-        // heatmap, mix shift, trade matrix, seasonal, reach, simhash
-        // banding, threshold sweep, vocab growth, k-core)
-        "q43c_jaccard_adaptive", "q208_price_elasticity",
-        "q209_return_rate", "q210_quartile_migration",
-        "q211_hour_dow_heatmap", "q212_priority_mix_shift",
-        "q213_trade_matrix", "q214_seasonal_index", "q215_supplier_reach",
-        "q216_simhash_neighbors", "q217_threshold_sweep",
-        "q218_vocab_growth", "q219_kcore_peel",
-        // round-8 batch (TPC-H decision-support shapes + audits/graph/
-        // profile/change-point)
-        "q227_small_qty_revenue", "q228_big_order_customers",
-        "q229_priority_late_exists", "q230_market_share",
-        "q231_waiting_suppliers", "q232_parts_supplier_cnt",
-        "q233_important_parts", "q234_or_pushdown_revenue",
-        "q235_min_price_supplier", "q236_excess_stock",
-        "q237_shipmode_priority", "q238_fd_violations",
-        "q239_pk_discovery", "q240_link_prediction",
-        "q241_embedding_dim_profile", "q242_cusum_changepoint",
-        "q243_nation_profit",
-        // round-8 corpus-science batch (winnowing, integer-log scores,
-        // LPA, robust trends, Gram matrix, retrieval eval, Q10, KM)
-        "q244_winnowing_overlap", "q245_surprisal_score",
-        "q246_label_propagation", "q247_theil_sen", "q248_mann_kendall",
-        "q249_embedding_gram", "q250_retrieval_eval",
-        "q251_returned_items", "q252_km_churn", "q253_bigram_fluency",
-        "q254_bpe_merge_step", "q255_delta_neardup", "q256_dataset_card",
-        "q257_seasonal_decompose", "q258_freq_spectrum",
-        "q259_quant_fidelity", "q255b_delta_neardup_bucketed",
-        "q260_doc_knn", "q261_price_dispersion", "q262_order_regularity",
-        "q263_class_moments", "q264_sequence_audit",
-        "q265_duplicate_payments",
-        // round-9 batch (routed simhash, leakage matrix, dedup ROI,
-        // class separation)
-        "q216c_simhash_neighbors_routed", "q266_source_leakage",
-        "q267_dedup_token_savings", "q268_class_separation",
-        "q269_boilerplate_share", "q270_context_fit",
-        "q50c_embedding_neardup_routed", "q271_pii_density",
-        "q272_shingle_diversity",
-        // round-10 corpus-profiling batch
-        "q273_stopword_share", "q274_vocab_overlap",
-        "q275_prefix_dup_groups", "q276_char_class_profile",
-        "q277_token_len_profile", "q278_dim_variance",
-        "q279_headdup_source_matrix", "q280_language_mix",
-        "q281_norm_outlier_screen",
-        // round-10 pipeline-planning batch
-        "q282_embedding_decon", "q283_knn_label_purity",
-        "q284_lsh_bucket_balance", "q285_shard_planner",
-        "q286_lexical_semantic_agreement",
-        // round-10 mixture/funnel batch
-        "q287_yield_funnel", "q288_length_diversity_rankcorr",
-        "q289_temperature_mixture",
-        // round-10 leakage/LM batch
-        "q290_head_edit_verify", "q291_kn_continuation",
-        "q292_fold_split", "q293_hard_negatives",
-        // round-10 calibration/audit batch
-        "q294_decon_n_sweep", "q295_lsh_calibration",
-        "q296_dedup_survivorship", "q297_modularity",
-        "q298_contamination_extent", "q299_fold_source_balance")
-      // Optional comma-separated filter so a new batch can be measured
-      // without re-timing the whole audit family.
-      val only = sys.env.get("SPARK_GRAFT_AUDIT_OPS")
-        .map(_.split(",").map(_.trim).toSet)
-      val selected = auditOps.filter(n => only.forall(_.contains(n)))
-      println(f"${"op"}%-26s ${"1x-cold"}%8s ${"1x"}%8s ${"10x-cold"}%9s ${"10x"}%8s ${"ratio"}%7s")
-      selected.foreach { name =>
-        val c1 = run(name, base)
-        val t1 = math.min(run(name, base), run(name, base))
-        val c2 = run(name, adir)
-        val t2 = math.min(run(name, adir), run(name, adir))
-        println(f"AUDIT $name%-26s $c1%8.2f $t1%8.2f $c2%9.2f $t2%8.2f ${t2 / t1}%7.1f")
-      }
-      spark.stop()
-      return
-    }
-
-    // Containment-only mode: q89's count join vs the asymmetric prefix
-    // filter (containmentPrefixJoin) on the uniform sf0.1 corpus and on
-    // the Zipfian corpus where hot-shingle co-occurrence dominates.
-    if (sys.env.contains("SPARK_GRAFT_CONTAIN_ONLY")) {
-      import graft.operators.LlmOps
-      val zdir = "/tmp/graft_zipf_c"
-      synthesizeZipf(spark, zdir, nDocs = 30000L)
-      def tRun(df: => org.apache.spark.sql.DataFrame): Double = time(noop(df))
-      Seq(("count", (dir: String) => SparkEntry.queries("q89_containment")(spark, dir)),
-          ("prefix", (dir: String) => LlmOps.containmentPrefixJoin(spark, dir)))
-        .foreach { case (label, f) =>
-          tRun(f(base)) // warm
-          val tu = math.min(tRun(f(base)), tRun(f(base)))
-          val tz = math.min(tRun(f(zdir)), tRun(f(zdir)))
-          println(f"CONTAIN $label%-8s uniform(sf0.1) $tu%7.2f  zipf(30k docs) $tz%7.2f")
-        }
-      spark.stop()
-      return
-    }
-
-    // Fuzzy-match-only mode: SymSpell variant blocking vs the blocked-
-    // quadratic baseline at 1× (sf0.1, 15k customers) and 10× (150k
-    // synthetic customers, same 25 nations and name shape). Block-pair
-    // volume grows ~100× at 10× rows; SymSpell candidates grow ~10×.
-    if (sys.env.contains("SPARK_GRAFT_FUZZY_ONLY")) {
-      import graft.operators.Extras
-      val fdir = "/tmp/graft_fuzzy"
-      spark.range(150000L)
-        .select((col("id") + 1).as("c_custkey"),
-          pmod(col("id"), lit(25)).as("c_nationkey"),
-          format_string("Customer#%09d", col("id") + 1).as("c_name"))
-        .write.mode("overwrite").parquet(s"$fdir/customer.parquet")
-      val fdir40 = "/tmp/graft_fuzzy40"
-      spark.range(600000L)
-        .select((col("id") + 1).as("c_custkey"),
-          pmod(col("id"), lit(25)).as("c_nationkey"),
-          format_string("Customer#%09d", col("id") + 1).as("c_name"))
-        .write.mode("overwrite").parquet(s"$fdir40/customer.parquet")
-      def tRun(df: => org.apache.spark.sql.DataFrame): Double = time(noop(df))
-      Seq(("blocked", Extras.fuzzyMatchBlocked _),
-          ("symspell", Extras.fuzzyMatchSymSpell _)).foreach { case (label, f) =>
-        tRun(f(spark, base)) // warm
-        val t1 = math.min(tRun(f(spark, base)), tRun(f(spark, base)))
-        val t10 = math.min(tRun(f(spark, fdir)), tRun(f(spark, fdir)))
-        val t40 = tRun(f(spark, fdir40)) // single rep: the point is the asymptote
-        println(f"FUZZY $label%-10s 1x(15k) $t1%7.2f  10x(150k) $t10%7.2f  40x(600k) $t40%8.2f")
-      }
-      spark.stop()
-      return
-    }
-
-    val skewOnly = sys.env.contains("SPARK_GRAFT_SKEW_ONLY")
-    if (!skewOnly) {
-      println(f"${"op"}%-26s ${"1x(sf0.1)"}%10s ${"10x-docs/5x-vecs"}%16s ${"ratio"}%7s")
-      ops.foreach { name =>
-        run(name, base) // warm: whole-stage codegen compiles once, untimed
-        val t1 = run(name, base)
-        val t2 = run(name, big)
-        println(f"SCALE $name%-26s $t1%10.2f $t2%16.2f ${t2 / t1}%7.1f")
-      }
-    }
-
-    // Skew shoot-out: count join vs PPJoin prefix filter on uniform
-    // (sf0.1-shaped) vs Zipfian shingle frequencies. Same oracle
-    // semantics; the winner flips with the corpus.
-    val zipf = "/tmp/graft_zipf"
-    synthesizeZipf(spark, zipf, nDocs = 30000L)
-    Seq("q43_ngram_jaccard", "q43b_jaccard_prefix").foreach { name =>
-      // warm per corpus (codegen + JIT profile), then min of 2 reps —
-      // the zipf co-occurrence shuffle is noisy run-to-run
-      run(name, base)
-      val tu = math.min(run(name, base), run(name, base))
-      run(name, zipf)
-      val tz = math.min(run(name, zipf), run(name, zipf))
-      println(f"SKEW $name%-26s uniform(sf0.1) $tu%7.2f zipf(30k docs) $tz%7.2f")
-    }
-
-    // The algorithmic crossover lives in the THRESHOLD: at t=0.3 each
-    // doc's prefix is 70% of its shingles (weak pruning — count join
-    // wins everywhere); at t=0.8, the production near-dup setting, the
-    // prefix shrinks to ~27% and drops every hot shingle on a skewed
-    // corpus. Same exact semantics at both thresholds.
-    import graft.operators.LlmOps
-    def runDf(df: => org.apache.spark.sql.DataFrame): Double = time(noop(df))
-    Seq(("count", (d: String, t: Int) => LlmOps.jaccardCountJoinAt(spark, d, t)),
-        ("prefix", (d: String, t: Int) => LlmOps.jaccardPrefixJoinAt(spark, d, t)))
-      .foreach { case (label, f) =>
-        runDf(f(zipf, LlmOps.productionThreshold10)) // warm
-        val tz = math.min(runDf(f(zipf, LlmOps.productionThreshold10)), runDf(f(zipf, LlmOps.productionThreshold10)))
-        println(f"SKEWT8 jaccard-$label%-19s zipf(30k docs, t=0.8) $tz%7.2f")
-      }
-
-    // Hot-key skew: 40M-row fact where key 0 carries 70% of all rows —
-    // the hot shuffle partition (~450MB) exceeds AQE's 256MB default
-    // split threshold, as a production hot key would.
-    import org.apache.spark.sql.DataFrame
-    val fact = spark.range(40000000L)
-      .select(
-        when(pmod(xxhash64(col("id")), lit(10)) < 7, 0L)
-          .otherwise(pmod(xxhash64(col("id") + 1), lit(100000))).as("key"),
-        (col("id") % 1000).cast("double").as("v"))
-    fact.write.mode("overwrite").parquet("/tmp/graft_skew/fact.parquet")
-    val factP = spark.read.parquet("/tmp/graft_skew/fact.parquet")
-
-    // Salted vs direct aggregation. Expected finding: for ALGEBRAIC
-    // aggregates Spark's map-side partial aggregation already absorbs
-    // the hot key, so salting about ties (it pays only when partial
-    // aggregation is ineffective — holistic aggs / exploded maps).
-    noop(factP.groupBy("key").agg(sum("v"), count(lit(1)))) // warm
-    val tDirect = time(noop(factP.groupBy("key").agg(sum("v").as("total"), count(lit(1)).as("n"))))
-    val tSalted = time(noop(graft.operators.Skew.saltedSum(factP, col("key"), col("v"), col("v"))))
-    println(f"SKEWAGG direct $tDirect%7.2f salted $tSalted%7.2f (partial agg absorbs algebraic hot keys)")
-
-    // AQE skew join: force SMJ (no broadcast) of the skewed fact against
-    // a 100k-row dim, with AQE skew-join splitting OFF vs ON. The join
-    // must be STAGE-TERMINAL: a fused partial aggregate above the SMJ
-    // suppresses OptimizeSkewedJoin in Spark 4.1 (plan-proved in
-    // AqeSkewSpec) — a real pipeline would stage the agg separately.
-    val dim = spark.range(100000L).select(col("id").as("key"),
-      concat(lit("d"), col("id")).as("attr"))
-    def skewJoin(): DataFrame = factP.join(dim, "key")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    // shuffle blocks are compressed, so the ~450MB hot partition can
-    // land under the 256MB default threshold — size to cores instead
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64MB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    noop(skewJoin()) // warm
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val tNoSkew = math.min(time(noop(skewJoin())), time(noop(skewJoin())))
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    val tSkew = math.min(time(noop(skewJoin())), time(noop(skewJoin())))
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
-    spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-    spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    println(f"SKEWJOIN aqe-off $tNoSkew%7.2f aqe-on $tSkew%7.2f (SMJ, hot key = 70%% of 40M rows)")
     spark.stop()
   }
 }

@@ -315,9 +315,10 @@ class PipelineSpec extends AnyFunSuite {
     // here through an INDEPENDENT registry invocation), and its two
     // plan tables must equal the declared q289/q285 run over the
     // materialized survivor corpus — same semantics through the
-    // parquet round-trip instead of the in-memory chain. PIPE10X
-    // (ScaleSmoke) asserts the same parity at 10× while measuring the
-    // composed wall vs the sum of isolated stage steady states.
+    // parquet round-trip instead of the in-memory chain. The PIPE10X
+    // leg (SCALE.md "Round 12: PIPE10X") asserted the same parity at
+    // 10× while measuring the composed wall vs the sum of isolated
+    // stage steady states.
     val dir = "/root/testdata/sf0.001"
     val r = operators.PipelineOps.curationRun(spark, dir)
     val q = SparkEntry.queries
